@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, ShortType}
 
 /** 10× scale tier for the bench (guide §1: measure at a scale where
   * data, not scheduler latency, dominates). At sf0.1 the full suite
@@ -52,15 +53,32 @@ object BenchScale {
   def generate(spark: SparkSession, srcDir: String, factor: Int): String = {
     require(factor >= 2, s"scale factor must be >= 2, got $factor")
     val dst = ScratchSpace.dir(spark, s"scale${factor}x_")
-    def stride(m: Long): Long = { var s = 1L; while (s <= m) s *= 10; s }
+    def stride(m: Long): BigInt = {
+      var s = BigInt(1); while (s <= m) s *= 10; s
+    }
     val reps = spark.range(factor).select(col("id").as("rep_i"))
     def replicate(table: String, key: String): Unit = {
       val src = spark.read.parquet(s"$srcDir/$table.parquet")
-      val k = stride(
-        src.agg(max(col(key).cast("long"))).head().getLong(0))
+      val maxKey = src.agg(max(col(key).cast("long"))).head()
+      require(!maxKey.isNullAt(0),
+        s"BenchScale: $table.$key has no values to scale (empty source table)")
+      val k = stride(maxKey.getLong(0))
+      // the cast back to the key's own type would silently wrap a
+      // shifted key past its range
+      val keyMax = src.schema(key).dataType match {
+        case ByteType => BigInt(Byte.MaxValue)
+        case ShortType => BigInt(Short.MaxValue)
+        case IntegerType => BigInt(Int.MaxValue)
+        case _ => BigInt(Long.MaxValue)
+      }
+      val lastKey = k * (factor - 1) + maxKey.getLong(0)
+      require(lastKey <= keyMax,
+        s"BenchScale: $table.$key overflows at ${factor}x: shifted key " +
+          s"$lastKey exceeds the column's ${src.schema(key).dataType.sql} " +
+          s"maximum $keyMax")
       src.crossJoin(reps)
         .withColumn(key,
-          (col(key).cast("long") + col("rep_i") * lit(k))
+          (col(key).cast("long") + col("rep_i") * lit(k.toLong))
             .cast(src.schema(key).dataType))
         .drop("rep_i")
         .write.mode("overwrite").parquet(s"$dst/$table.parquet")

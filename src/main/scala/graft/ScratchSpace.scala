@@ -97,6 +97,35 @@ object ScratchSpace {
     spark.read.parquet(d)
   }
 
+  /** Per-round lineage truncation for an iterative loop: a reliable
+    * `checkpoint()` when the context has a checkpoint dir, else a
+    * `round_N` parquet round-trip under one fresh `prefix` dir. Either
+    * way each round's plan is a flat scan, so round cost stays
+    * constant (persist() alone keeps every round's plan chained on all
+    * the rounds before it).
+    */
+  private[graft] final class Rounds(spark: SparkSession, prefix: String) {
+    private val scratch =
+      if (spark.sparkContext.getCheckpointDir.isDefined) None
+      else Some(dir(spark, prefix))
+    private var round = 0
+
+    def materialize(df: org.apache.spark.sql.DataFrame)
+        : org.apache.spark.sql.DataFrame = {
+      round += 1
+      scratch match {
+        case None => df.checkpoint()
+        case Some(d) =>
+          val p = s"$d/round_$round"
+          df.write.mode("overwrite").parquet(p)
+          spark.read.parquet(p)
+      }
+    }
+
+    /** Delete the round files (no-op on the checkpoint path). */
+    def cleanup(): Unit = scratch.foreach(delete(spark, _))
+  }
+
   /** Write raw bytes to `dir/name` through the Hadoop FS API (parent
     * dirs auto-created; `name` may contain `/`). The fixture-planting
     * primitive — works identically on a local root and an object

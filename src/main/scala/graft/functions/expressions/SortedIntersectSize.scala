@@ -22,9 +22,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * a's distinct elements that occur in b, so its size is the DISTINCT
   * common-value count — the duplicate-skipping merge below counts the
   * same quantity (order of elements cannot affect set membership).
-  * Nulls inside the arrays are not supported (the caller feeds
-  * xxhash64 outputs, which are never null); a null ARRAY input yields
-  * null like every null-intolerant binary expression.
+  * Arrays whose type admits null elements fail analysis (the merge
+  * reads every element with `getLong`; the caller feeds
+  * `collect_list` of xxhash64 outputs, typed non-null); a null ARRAY
+  * input yields null like every null-intolerant binary expression.
   *
   * CodegenFallback by the WordShingles/PiiScrub precedent: the ~|a|+|b|
   * step merge dominates the interpreted dispatch, and the expression
@@ -39,11 +40,12 @@ case class SortedLongIntersectSize(left: Expression, right: Expression)
       : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
     import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
     def ok(dt: DataType) = dt match {
-      case ArrayType(LongType, _) => true
+      case ArrayType(LongType, false) => true
       case _ => false
     }
     if (ok(left.dataType) && ok(right.dataType)) TypeCheckSuccess
-    else TypeCheckFailure(s"$prettyName: arguments must be ARRAY<BIGINT>, " +
+    else TypeCheckFailure(s"$prettyName: arguments must be ARRAY<BIGINT> " +
+      "with non-null elements, " +
       s"got ${left.dataType.catalogString} / ${right.dataType.catalogString}")
   }
 

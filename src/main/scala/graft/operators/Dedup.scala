@@ -730,31 +730,15 @@ object Dedup {
       pairs: DataFrame,
       maxIter: Int = 20): DataFrame = {
     val spark = allIds.sparkSession
-    val sc = spark.sparkContext
-    val reliable = sc.getCheckpointDir.isDefined
     // Round state gets FILE-TRUNCATED lineage, the same discipline as
     // Graphs.kcoreDegreesRun: persist() keeps each round's PLAN chained
     // on everything before it, and when the pair source is a heavy
     // expression subtree (q141's 16-hyperplane LSH literals) a
     // 20-round chain OOMed a 1G bench JVM on plan bookkeeping alone.
-    // A scratch-parquet round-trip makes every round a flat file scan.
-    // ScratchSpace resolves the round-file root (conf'd URI →
-    // checkpoint dir → per-JVM local temp with one shutdown hook), so
-    // the fallback is cluster-safe whenever spark.graft.scratch.dir
-    // points at shared storage.
-    val scratch =
-      if (reliable) None
-      else Some(graft.ScratchSpace.dir(spark, "cc_"))
-    var round = 0
-    def materialize(df: DataFrame): DataFrame = {
-      round += 1
-      if (reliable) df.checkpoint()
-      else {
-        val p = s"${scratch.get}/round_$round"
-        df.write.mode("overwrite").parquet(p)
-        spark.read.parquet(p)
-      }
-    }
+    // ScratchSpace.Rounds makes every round a flat file scan, under a
+    // root that is cluster-safe whenever spark.graft.scratch.dir points
+    // at shared storage.
+    val rounds = new graft.ScratchSpace.Rounds(spark, "cc_")
     val sym = pairs.select(col("id_a").cast("long").as("src"),
         col("id_b").cast("long").as("dst"))
       .unionAll(pairs.select(col("id_b").cast("long").as("src"),
@@ -765,76 +749,29 @@ object Dedup {
     // labels twice — own ∪ messages — doubles the logical plan per
     // round: exponential tree growth that OOMs plan stringification on
     // long chains even when every round's data is persisted.)
-    val edges = materialize(
+    val edges = rounds.materialize(
       sym.unionAll(sym.select(col("src"))
         .distinct().select(col("src"), col("src").as("dst"))))
     val edgeCount = edges.count()
-    // ADAPTIVE SMALL-GRAPH PATH (round-13 q141 adjudication): the
-    // distributed loop's cost is rounds x fixed job latency (scratch
-    // round-trip + convergence count), which DOMINATES when the pair
-    // graph is tiny — measured 12 s of q141's 14.5 s warm over only
-    // 1,173 pairs at sf0.1. The dup graph is the near-dup detector's
-    // OUTPUT (orders of magnitude under the corpus), so "tiny" is the
-    // common case even at 100 TB; when it genuinely isn't, the
-    // distributed min-label + pointer-doubling loop below takes over.
-    // Bounded like Similarity.assembleCentroids' driver hop: the local
-    // path streams at most `spark.graft.cc.localEdgeMax` (default 2M)
-    // edge rows (~100 MB transient) through driver union-find —
-    // identical output (min member id per component) by construction.
-    val localMax = spark.conf.getOption("spark.graft.cc.localEdgeMax")
-      .map(_.toLong).getOrElse(2000000L)
-    if (edgeCount <= localMax) {
-      val idx = new java.util.HashMap[Long, Integer](
-        math.min(edgeCount * 2 + 16L, Int.MaxValue.toLong).toInt)
-      val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val parent = scala.collection.mutable.ArrayBuffer.empty[Int]
-      def node(id: Long): Int = {
-        val got = idx.get(id)
-        if (got != null) got.intValue()
-        else {
-          val n = ids.length
-          idx.put(id, Integer.valueOf(n)); ids += id; parent += n; n
-        }
-      }
-      def find(x0: Int): Int = {
-        var x = x0
-        while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
-        x
-      }
-      // collect(), not toLocalIterator(): the iterator fetches ONE
-      // partition per sequential Spark job — measured 5-6.6 s to drain
-      // a 3.9k-row cached edge list across 32 partitions vs 0.3 s for
-      // the single collect job. Memory stays bounded by the
-      // localEdgeMax gate above (~2M rows transient at the cap).
-      val rows = edges.collect()
-      var ri = 0
-      while (ri < rows.length) {
-        val r = rows(ri); ri += 1
-        val a = find(node(r.getLong(0)))
-        val b = find(node(r.getLong(1)))
-        if (a != b) parent(math.max(a, b)) = math.min(a, b)
-      }
-      val n = ids.length
-      val minId = new Array[Long](n)
-      java.util.Arrays.fill(minId, Long.MaxValue)
-      var i = 0
-      while (i < n) {
-        val r = find(i)
-        if (ids(i) < minId(r)) minId(r) = ids(i)
-        i += 1
-      }
-      val out = new Array[(Long, Long)](n)
-      i = 0
-      while (i < n) { out(i) = (ids(i), minId(find(i))); i += 1 }
-      // LocalRelation labels: the final singleton-rejoin below
-      // broadcasts it — no shuffle at all on this path.
-      val labels = spark.createDataFrame(out.toSeq).toDF("id", "label")
-      return allIds.select(col(idCol).cast("long").as("id"))
-        .join(labels, Seq("id"), "left")
+    // Singletons rejoin here. Every round (including the final labels)
+    // is a flat file — scratch parquet for the JVM's life, or reliable
+    // checkpoint files — so the result reads one small table, with no
+    // residual lineage into the caller's pair pipeline.
+    def withSingletons(labels: DataFrame): DataFrame =
+      allIds.select(col(idCol).cast("long").as("id"))
+        .join(labels.select(col("id"), col("label")), Seq("id"), "left")
         .select(col("id").as(idCol),
           coalesce(col("label"), col("id")).as("cluster_id"))
+    // ADAPTIVE SMALL-GRAPH PATH (LocalGraph): the distributed loop
+    // below costs rounds x fixed job latency (scratch round-trip +
+    // convergence count), which dominates on a tiny pair graph.
+    LocalGraph.load("clustersFromPairs", edges, edgeCount) match {
+      case Some(g) =>
+        // LocalRelation labels: the rejoin broadcasts them, no shuffle
+        return withSingletons(g.frame("label", g.minLabels()))
+      case None =>
     }
-    var labels = materialize(
+    var labels = rounds.materialize(
       edges.where(col("src") === col("dst"))
         .select(col("src").as("id"), col("src").as("label")))
     var converged = false
@@ -852,7 +789,7 @@ object Dedup {
         edgeCount / 65536L + 1L)).toString)
     try {
     while (!converged && iter < maxIter) {
-      val stepped = materialize(
+      val stepped = rounds.materialize(
         edges.join(labels.select(col("id").as("src"), col("label")), "src")
           .groupBy(col("dst"))
           .agg(
@@ -896,14 +833,7 @@ object Dedup {
         s"clustersFromPairs did not converge in $maxIter rounds — the " +
           "duplicate graph's diameter exceeds maxIter; raise maxIter")
     }
-    // Singletons rejoin here. Every round (including the final labels)
-    // is a flat file — scratch parquet for the JVM's life, or reliable
-    // checkpoint files — so the result below reads one small table,
-    // with no residual lineage into the caller's pair pipeline.
-    allIds.select(col(idCol).cast("long").as("id"))
-      .join(labels.select(col("id"), col("label")), Seq("id"), "left")
-      .select(col("id").as(idCol),
-        coalesce(col("label"), col("id")).as("cluster_id"))
+    withSingletons(labels)
   }
 
   /** Incremental cluster maintenance — fold a NEW batch of verified

@@ -96,86 +96,30 @@ object Graphs {
     val deg = sym.groupBy("src").agg(count(lit(1)).as("outdeg"))
     val edges = sym.join(deg, "src")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // ADAPTIVE small-graph path (clustersFromPairs/kcore/LPA rule,
-    // same conf key): iters × (join + agg) of fixed job latency
-    // dominates on a pair-graph of a few thousand edges. The
-    // recurrence is FIXED-POINT INTEGER arithmetic throughout —
-    // order-independent sums, floor divisions — so a driver replay is
-    // bit-identical to the distributed loop by construction.
-    // DRIVER-MEMORY NOTE (ADVICE r19): the local path streams up to
-    // localEdgeMax symmetric edge rows into per-node adjacency
-    // buffers — at the 2M default that is O(100 MB) of driver heap,
-    // sized for the default 8g driver. Deployments with small drivers
-    // should lower `spark.graft.cc.localEdgeMax`; the edges.count()
-    // that gates the branch also materializes the persisted edge list
-    // the distributed loop re-references every round, so it is not
-    // wasted work on the distributed path.
-    val sparkS = pairs.sparkSession
-    val localMax = sparkS.conf.getOption("spark.graft.cc.localEdgeMax")
-      .map(_.toLong).getOrElse(2000000L)
-    val edgeCount = edges.count()
-    if (edgeCount <= localMax) {
-      val idx = new java.util.HashMap[Long, Integer](
-        math.min(edgeCount * 2 + 16L, Int.MaxValue.toLong).toInt)
-      val nodeIds = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val adj = scala.collection.mutable.ArrayBuffer
-        .empty[scala.collection.mutable.ArrayBuffer[Int]]
-      def node(id: Long): Int = {
-        val got = idx.get(id)
-        if (got != null) got.intValue()
-        else {
-          val n = nodeIds.length
-          idx.put(id, Integer.valueOf(n))
-          nodeIds += id
-          adj += scala.collection.mutable.ArrayBuffer.empty[Int]
-          n
+    // ADAPTIVE small-graph path (LocalGraph): iters × (join + agg) of
+    // fixed job latency dominates on a pair-graph of a few thousand
+    // edges. The recurrence is fixed-point integer arithmetic
+    // throughout (order-independent sums, floor divisions), so the
+    // driver replay is bit-identical to the distributed loop. The
+    // edges.count() gate also materializes the persisted edge list the
+    // distributed loop re-references every round.
+    val local = LocalGraph.load("pagerank",
+      edges.select(col("src"), col("dst")), edges.count())
+    val ranks = local match {
+      case Some(g) => g.frame("r10k", g.pagerank10k(iters, d100, base10k))
+      case None =>
+        var ranks = edges.select(col("src").as("id")).distinct()
+          .select(col("id"), lit(10000L).as("r10k"))
+        (1 to iters).foreach { _ =>
+          ranks = edges
+            .join(ranks.select(col("id").as("src"), col("r10k")), "src")
+            .groupBy(col("dst"))
+            .agg(sum(expr("(r10k * 10000) DIV outdeg")).as("inflow"))
+            .select(col("dst").as("id"),
+              (lit(base10k) +
+                expr(s"($d100 * inflow + 500000) DIV 1000000")).as("r10k"))
         }
-      }
-      // collect(), not toLocalIterator(): the iterator fetches ONE
-      // partition per sequential Spark job — measured 5-6.6 s to drain
-      // a 3.9k-row cached edge list across 32 partitions vs 0.3 s for
-      // the single collect job. Memory stays bounded by the
-      // localEdgeMax gate above (~2M rows transient at the cap).
-      val rows = edges.select(col("src"), col("dst")).collect()
-      var ri = 0
-      while (ri < rows.length) {
-        val r = rows(ri); ri += 1
-        adj(node(r.getLong(0))) += node(r.getLong(1))
-      }
-      val n = nodeIds.length
-      var r10k = Array.fill(n)(10000L)
-      (1 to iters).foreach { _ =>
-        val inflow = new Array[Long](n)
-        var u = 0
-        while (u < n) {
-          val contrib = (r10k(u) * 10000L) / adj(u).length
-          adj(u).foreach(v => inflow(v) += contrib)
-          u += 1
-        }
-        r10k = Array.tabulate(n)(v =>
-          base10k + (d100 * inflow(v) + 500000L) / 1000000L)
-      }
-      val out = new Array[(Long, Long)](n)
-      var i = 0
-      while (i < n) { out(i) = (nodeIds(i), r10k(i)); i += 1 }
-      val ranksLocal = sparkS.createDataFrame(out.toSeq).toDF("id", "r10k")
-      val result = allIds.select(col(idCol).cast("long").as(idCol))
-        .join(ranksLocal.withColumnRenamed("id", idCol), Seq(idCol), "left")
-        .select(col(idCol),
-          (coalesce(col("r10k"), lit(base10k)).cast("double") / 10000.0)
-            .as("rank"))
-      return new PagerankRun(result, edges)
-    }
-    var ranks = edges.select(col("src").as("id")).distinct()
-      .select(col("id"), lit(10000L).as("r10k"))
-    (1 to iters).foreach { _ =>
-      ranks = edges
-        .join(ranks.select(col("id").as("src"), col("r10k")), "src")
-        .groupBy(col("dst"))
-        .agg(sum(expr("(r10k * 10000) DIV outdeg")).as("inflow"))
-        .select(col("dst").as("id"),
-          (lit(base10k) +
-            expr(s"($d100 * inflow + 500000) DIV 1000000")).as("r10k"))
+        ranks
     }
     val result = allIds.select(col(idCol).cast("long").as(idCol))
       .join(ranks.withColumnRenamed("id", idCol), Seq(idCol), "left")
@@ -225,94 +169,25 @@ object Graphs {
       .where(col("a") =!= col("b"))
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // ADAPTIVE local path (same conf key as CC/kcore/LPA/PageRank):
-    // the distributed census is ~10 fixed-latency jobs (degree agg,
-    // two orientation joins, wedge self-join, closing join, three
-    // aggregates) regardless of size — measured 2.9 s warm on a
-    // 3.9k-edge near-dup graph at sf0.1. The local replay is the EXACT
-    // same census: n_edges = |E|, n_wedges = Σ deg·(deg−1)/2, and
-    // n_triangles by degree-ordered orientation + sorted out-neighbor
-    // intersection (each triangle counted once at its unique
-    // (deg,id)-lowest apex) — all exact integer counts, so the two
-    // paths are output-identical by construction. O(m^1.5) worst case
-    // stays driver-feasible under the 2M-edge cap.
-    val sparkT = pairs.sparkSession
-    val localMaxT = sparkT.conf.getOption("spark.graft.cc.localEdgeMax")
-      .map(_.toLong).getOrElse(2000000L)
-    val edgeCountT = e.count()
-    if (edgeCountT <= localMaxT) {
-      val rows = e.collect()
-      val idx = new java.util.HashMap[Long, Integer](
-        math.min(edgeCountT * 2 + 16L, Int.MaxValue.toLong).toInt)
-      val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-      def node(id: Long): Int = {
-        val got = idx.get(id)
-        if (got != null) got.intValue()
-        else {
-          val n = ids.length
-          idx.put(id, Integer.valueOf(n)); ids += id; n
-        }
-      }
-      val ea = new Array[Int](rows.length)
-      val eb = new Array[Int](rows.length)
-      var ri = 0
-      while (ri < rows.length) {
-        val r = rows(ri)
-        ea(ri) = node(r.getLong(0)); eb(ri) = node(r.getLong(1)); ri += 1
-      }
-      val n = ids.length
-      val deg = new Array[Long](n)
-      ri = 0
-      while (ri < rows.length) { deg(ea(ri)) += 1; deg(eb(ri)) += 1; ri += 1 }
-      var wedges = 0L
-      var i = 0
-      while (i < n) { wedges += deg(i) * (deg(i) - 1) / 2; i += 1 }
-      // orient each edge from its (deg, id)-lower endpoint
-      def lower(x: Int, y: Int): Boolean =
-        deg(x) < deg(y) || (deg(x) == deg(y) && ids(x) < ids(y))
-      val outDeg = new Array[Int](n)
-      ri = 0
-      while (ri < rows.length) {
-        if (lower(ea(ri), eb(ri))) outDeg(ea(ri)) += 1
-        else outDeg(eb(ri)) += 1
-        ri += 1
-      }
-      val out = Array.tabulate(n)(u => new Array[Long](outDeg(u)))
-      val fill = new Array[Int](n)
-      ri = 0
-      while (ri < rows.length) {
-        val (u, v) =
-          if (lower(ea(ri), eb(ri))) (ea(ri), eb(ri)) else (eb(ri), ea(ri))
-        out(u)(fill(u)) = ids(v); fill(u) += 1
-        ri += 1
-      }
-      i = 0
-      while (i < n) { java.util.Arrays.sort(out(i)); i += 1 }
-      var tri = 0L
-      ri = 0
-      while (ri < rows.length) {
-        val (u, v) =
-          if (lower(ea(ri), eb(ri))) (ea(ri), eb(ri)) else (eb(ri), ea(ri))
-        // |N+(u) ∩ N+(v)| — every common out-neighbor closes one
-        // triangle whose (deg,id)-lowest apex is u
-        val xs = out(u); val ys = out(v)
-        var p = 0; var q = 0
-        while (p < xs.length && q < ys.length) {
-          if (xs(p) < ys(q)) p += 1
-          else if (xs(p) > ys(q)) q += 1
-          else { tri += 1; p += 1; q += 1 }
-        }
-        ri += 1
-      }
-      // nullability mirrors the distributed shape exactly: counts are
-      // non-null, the wedge SUM aggregate is nullable — and on an
-      // EMPTY edge set the distributed sum-over-nothing is NULL, so
-      // the local value is too
-      val result = sparkT.range(1).select(
-        lit(edgeCountT).as("n_edges"),
-        when(lit(edgeCountT > 0), lit(wedges)).as("n_wedges"),
-        lit(tri).as("n_triangles"))
-      return new TriangleRun(result, e)
+    // ADAPTIVE local path (LocalGraph): the distributed census is ~10
+    // fixed-latency jobs (degree agg, two orientation joins, wedge
+    // self-join, closing join, three aggregates) regardless of size —
+    // measured 2.9 s warm on a 3.9k-edge near-dup graph at sf0.1. The
+    // local census counts the same exact integers with the same
+    // degree-ordered orientation, so the two paths are output-identical.
+    val edgeCount = e.count()
+    LocalGraph.load("triangleStats", e, edgeCount, undirected = true) match {
+      case Some(g) =>
+        val (wedges, triangles) = g.triangleCensus()
+        // nullability mirrors the distributed shape exactly: counts are
+        // non-null, the wedge SUM aggregate is nullable — and on an
+        // EMPTY edge set the distributed sum-over-nothing is NULL, so
+        // the local value is too
+        return new TriangleRun(pairs.sparkSession.range(1).select(
+          lit(edgeCount).as("n_edges"),
+          when(lit(edgeCount > 0), lit(wedges)).as("n_wedges"),
+          lit(triangles).as("n_triangles")), e)
+      case None =>
     }
     val deg = e.select(explode(array(col("a"), col("b"))).as("n"))
       .groupBy("n").agg(count(lit(1)).as("deg"))
@@ -413,103 +288,30 @@ object Graphs {
         greatest(col("a0"), col("b0")).as("b"))
       .where(col("a") =!= col("b"))
       .distinct()
-    // ADAPTIVE local path (the clustersFromPairs round-13 lesson,
-    // same conf key): the distributed peel costs rounds × fixed job
-    // latency (degree agg + anti-joins + a scratch round-trip per
-    // round — q125 measured 12.5 s over a graph of a few thousand
-    // edges). The near-dup graph is the detector's OUTPUT — orders of
-    // magnitude under the corpus — so "tiny" is the common case even
-    // at 100 TB; under `spark.graft.cc.localEdgeMax` (default 2M,
-    // ~100 MB transient) the edges stream through a driver peel with
-    // IDENTICAL output (the k-core is unique — removal order cannot
-    // change the fixed point, and survivor degrees are alive-neighbor
-    // counts either way).
-    val localMax = spark.conf.getOption("spark.graft.cc.localEdgeMax")
-      .map(_.toLong).getOrElse(2000000L)
+    // ADAPTIVE local path (LocalGraph): the distributed peel costs
+    // rounds × fixed job latency (degree agg + anti-joins + a scratch
+    // round-trip per round — q125 measured 12.5 s over a graph of a few
+    // thousand edges). The local peel's output is IDENTICAL: the k-core
+    // is unique, so removal order cannot change the fixed point, and
+    // survivor degrees are alive-neighbor counts either way.
     val eMat = e.persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val edgeCount = eMat.count()
-    if (edgeCount <= localMax) {
-      val idx = new java.util.HashMap[Long, Integer](
-        math.min(edgeCount * 2 + 16L, Int.MaxValue.toLong).toInt)
-      val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val adj = scala.collection.mutable.ArrayBuffer
-        .empty[scala.collection.mutable.ArrayBuffer[Int]]
-      def node(id: Long): Int = {
-        val got = idx.get(id)
-        if (got != null) got.intValue()
-        else {
-          val n = ids.length
-          idx.put(id, Integer.valueOf(n))
-          ids += id
-          adj += scala.collection.mutable.ArrayBuffer.empty[Int]
-          n
-        }
-      }
-      // collect(), not toLocalIterator(): the iterator fetches ONE
-      // partition per sequential Spark job — measured 5-6.6 s to drain
-      // a 3.9k-row cached edge list across 32 partitions vs 0.3 s for
-      // the single collect job. Memory stays bounded by the
-      // localEdgeMax gate above (~2M rows transient at the cap).
-      val rows = eMat.collect()
-      var ri = 0
-      while (ri < rows.length) {
-        val r = rows(ri); ri += 1
-        val a = node(r.getLong(0))
-        val b = node(r.getLong(1))
-        adj(a) += b
-        adj(b) += a
-      }
-      eMat.unpersist()
-      val n = ids.length
-      val deg = Array.tabulate(n)(adj(_).length)
-      val dead = new Array[Boolean](n)
-      val stack = scala.collection.mutable.ArrayBuffer.empty[Int]
-      var i = 0
-      while (i < n) {
-        if (deg(i) < k) { dead(i) = true; stack += i }
-        i += 1
-      }
-      while (stack.nonEmpty) {
-        val u = stack.remove(stack.length - 1)
-        adj(u).foreach { v =>
-          if (!dead(v)) {
-            deg(v) -= 1
-            if (deg(v) < k) { dead(v) = true; stack += v }
-          }
-        }
-      }
-      val out = Seq.newBuilder[(Long, Long)]
-      i = 0
-      while (i < n) {
-        if (!dead(i)) out += ((ids(i), deg(i).toLong))
-        i += 1
-      }
-      val result = spark.createDataFrame(out.result())
-        .toDF("node", "core_degree")
-      return new KcoreRun(result, () => ())
+    LocalGraph.load("kcoreDegrees", eMat, eMat.count(),
+        undirected = true) match {
+      case Some(g) =>
+        eMat.unpersist()
+        val deg = g.coreDegrees(k)
+        val result = g.frame("core_degree", deg.map(_.toLong), deg(_) >= 0)
+          .withColumnRenamed("id", "node")
+        return new KcoreRun(result, () => ())
+      case None =>
     }
-    val reliable = spark.sparkContext.getCheckpointDir.isDefined
-    // Round-file root via ScratchSpace (conf'd URI → checkpoint dir →
+    // Round files under ScratchSpace (conf'd URI → checkpoint dir →
     // per-JVM local temp with one shutdown hook): cluster-safe when
     // spark.graft.scratch.dir points at shared storage, and callers
     // using kcoreDegrees() without release() no longer stack hooks.
-    val scratch =
-      if (reliable) None
-      else Some(graft.ScratchSpace.dir(spark, "kcore_"))
-    var round = 0
-    def materialize(df: DataFrame): DataFrame = {
-      round += 1
-      if (reliable) df.checkpoint()
-      else {
-        val p = s"${scratch.get}/round_$round"
-        df.write.mode("overwrite").parquet(p)
-        spark.read.parquet(p)
-      }
-    }
-    def cleanup(): Unit =
-      scratch.foreach(graft.ScratchSpace.delete(spark, _))
-    var alive = materialize(
+    val rounds = new graft.ScratchSpace.Rounds(spark, "kcore_")
+    var alive = rounds.materialize(
       eMat.select(col("a").as("src"), col("b").as("dst"))
         .unionAll(eMat.select(col("b").as("src"), col("a").as("dst"))))
     eMat.unpersist()
@@ -522,14 +324,14 @@ object Graphs {
         .select(col("src").as("node"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       if (bad.count() == 0L) converged = true
-      else alive = materialize(
+      else alive = rounds.materialize(
         alive.join(bad, col("src") === col("node"), "left_anti")
           .join(bad, col("dst") === col("node"), "left_anti"))
       bad.unpersist()
       iter += 1
     }
     if (!converged) {
-      cleanup()
+      rounds.cleanup()
       throw new IllegalStateException(
         s"kcoreDegrees did not converge in $maxIter rounds — peel depth " +
           "exceeds maxIter; raise maxIter")
@@ -537,7 +339,7 @@ object Graphs {
     val result = alive.groupBy(col("src"))
       .agg(count(lit(1)).as("core_degree"))
       .select(col("src").as("node"), col("core_degree"))
-    new KcoreRun(result, () => cleanup())
+    new KcoreRun(result, () => rounds.cleanup())
   }
   /** Synchronous label propagation (community detection, fixed
     * `rounds`): labels start as node ids; each round every node takes
@@ -614,117 +416,51 @@ object Graphs {
         col(aCol).cast("long").as("dst")))
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // ADAPTIVE small-graph path (the clustersFromPairs/kcore rule,
-    // same conf key): the distributed loop costs rounds × ~1 s fixed
-    // job latency regardless of data size — measured ~5 s of q176's
-    // 6.3 s over a graph of a few thousand edges. Under
-    // `spark.graft.cc.localEdgeMax` (default 2M) the symmetric edge
-    // rows stream through a driver loop replaying the EXACT same
-    // synchronous update (argmax by count desc, label asc — a total
-    // order, so the two paths are output-identical by construction);
-    // isolated ids keep their own label via the same left-join rebase.
-    val spark = pairs.sparkSession
-    val localMax = spark.conf.getOption("spark.graft.cc.localEdgeMax")
-      .map(_.toLong).getOrElse(2000000L)
-    val edgeCount = edges.count()
-    if (edgeCount <= localMax) {
-      val idx = new java.util.HashMap[Long, Integer](
-        math.min(edgeCount * 2 + 16L, Int.MaxValue.toLong).toInt)
-      val nodeIds = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val adj = scala.collection.mutable.ArrayBuffer
-        .empty[scala.collection.mutable.ArrayBuffer[Int]]
-      def node(id: Long): Int = {
-        val got = idx.get(id)
-        if (got != null) got.intValue()
-        else {
-          val n = nodeIds.length
-          idx.put(id, Integer.valueOf(n))
-          nodeIds += id
-          adj += scala.collection.mutable.ArrayBuffer.empty[Int]
-          n
+    // ADAPTIVE small-graph path (LocalGraph): the distributed loop
+    // costs rounds × ~1 s fixed job latency regardless of data size —
+    // measured ~5 s of q176's 6.3 s over a graph of a few thousand
+    // edges. The local loop replays the EXACT same synchronous update
+    // (argmax by count desc, label asc — a total order). The
+    // distributed neigh join sources labels from the ids-rebased label
+    // table, so a dst OUTSIDE allIds never contributes a label: the
+    // left-semi filter on ids drops those edge rows before the collect,
+    // or the two paths diverge on pair endpoints that escape the id set.
+    val localEdges = edges
+      .join(ids.select(col("id").as("dst")), Seq("dst"), "left_semi")
+      .select(col("src"), col("dst"))
+    val local =
+      LocalGraph.load("labelPropagation", localEdges, edges.count())
+    val labels = local match {
+      case Some(g) =>
+        // isolated ids keep their own label via the same left-join rebase
+        val found = g.frame("label", g.labelPropagation(rounds))
+        ids.join(found, Seq("id"), "left")
+          .select(col("id"), coalesce(col("label"), col("id")).as("label"))
+      case None =>
+        var labels = ids.select(col("id"), col("id").as("label"))
+        for (_ <- 1 to rounds) {
+          val neigh = edges
+            .join(labels.select(col("id").as("dst"), col("label")), "dst")
+            .groupBy(col("src"), col("label"))
+            .agg(count(lit(1)).as("c"))
+          // argmax by (count desc, label asc): max of (c, -label)
+          val winner = neigh.groupBy(col("src"))
+            .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("w"))
+            .select(col("src").as("id"), (-col("w.nl")).as("label"))
+          // Rebase each round on the CONSTANT id set, not the previous
+          // labels: a node either has a winner row (it has neighbors —
+          // every round) or never does (isolated — keeps its own id), so
+          // ids.join(winner) is output-identical to labels.join(winner)
+          // while referencing the previous round's labels exactly ONCE
+          // (via neigh). Two references per round would DOUBLE the
+          // unrolled plan each round — the exponential-lineage class
+          // LoopLineageSpec guards (it asserts linear growth at rounds=8).
+          labels = ids
+            .join(winner, Seq("id"), "left")
+            .select(col("id"),
+              coalesce(col("label"), col("id")).as("label"))
         }
-      }
-      // One adjacency entry per DIRECTED symmetric edge row — exactly
-      // the rows the distributed neigh join would count. That join
-      // sources labels from the ids-rebased label table, so a dst
-      // OUTSIDE allIds never contributes a label: filter those edge
-      // rows out here too (left-semi on ids) or the two paths diverge
-      // on inputs whose pair endpoints escape the id set.
-      // collect(), not toLocalIterator(): the iterator fetches ONE
-      // partition per sequential Spark job — measured 5-6.6 s to drain
-      // a 3.9k-row cached edge list across 32 partitions vs 0.3 s for
-      // the single collect job. Memory stays bounded by the
-      // localEdgeMax gate above (~2M rows transient at the cap).
-      val rows = edges
-        .join(ids.select(col("id").as("dst")), Seq("dst"), "left_semi")
-        .select(col("src"), col("dst"))
-        .collect()
-      var ri = 0
-      while (ri < rows.length) {
-        val r = rows(ri); ri += 1
-        adj(node(r.getLong(0))) += node(r.getLong(1))
-      }
-      val n = nodeIds.length
-      var lab = Array.tabulate(n)(i => nodeIds(i))
-      for (_ <- 1 to rounds) {
-        val next = new Array[Long](n)
-        val cnt = new java.util.HashMap[Long, Long]()
-        var u = 0
-        while (u < n) {
-          if (adj(u).isEmpty) next(u) = nodeIds(u) // isolated: own id
-          else {
-            cnt.clear()
-            adj(u).foreach { v =>
-              cnt.merge(lab(v), 1L, (a, b) => a + b): Unit
-            }
-            var bestLab = Long.MaxValue
-            var bestC = 0L
-            val e = cnt.entrySet().iterator()
-            while (e.hasNext) {
-              val kv = e.next()
-              val (l, c) = (kv.getKey.longValue(), kv.getValue.longValue())
-              if (c > bestC || (c == bestC && l < bestLab)) {
-                bestC = c; bestLab = l
-              }
-            }
-            next(u) = bestLab
-          }
-          u += 1
-        }
-        lab = next
-      }
-      val out = new Array[(Long, Long)](n)
-      var i = 0
-      while (i < n) { out(i) = (nodeIds(i), lab(i)); i += 1 }
-      val labelsLocal = spark.createDataFrame(out.toSeq).toDF("id", "label")
-      return new LpaRun(
-        ids.join(labelsLocal, Seq("id"), "left")
-          .select(col("id").as(idCol),
-            coalesce(col("label"), col("id")).as("community")),
-        edges, ids)
-    }
-    var labels = ids.select(col("id"), col("id").as("label"))
-    for (_ <- 1 to rounds) {
-      val neigh = edges
-        .join(labels.select(col("id").as("dst"), col("label")), "dst")
-        .groupBy(col("src"), col("label"))
-        .agg(count(lit(1)).as("c"))
-      // argmax by (count desc, label asc): max of (c, -label)
-      val winner = neigh.groupBy(col("src"))
-        .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("w"))
-        .select(col("src").as("id"), (-col("w.nl")).as("label"))
-      // Rebase each round on the CONSTANT id set, not the previous
-      // labels: a node either has a winner row (it has neighbors —
-      // every round) or never does (isolated — keeps its own id), so
-      // ids.join(winner) is output-identical to labels.join(winner)
-      // while referencing the previous round's labels exactly ONCE
-      // (via neigh). Two references per round would DOUBLE the
-      // unrolled plan each round — the exponential-lineage class
-      // LoopLineageSpec guards (it asserts linear growth at rounds=8).
-      labels = ids
-        .join(winner, Seq("id"), "left")
-        .select(col("id"),
-          coalesce(col("label"), col("id")).as("label"))
+        labels
     }
     new LpaRun(
       labels.select(col("id").as(idCol), col("label").as("community")),

@@ -2746,12 +2746,12 @@ object ExtendedQueries {
       def audit(tag: String, keys: Seq[org.apache.spark.sql.Column]) = {
         val run = graft.operators.Layout.skippingAuditRun(
           li, keys, col("l_partkey"), blockRows = 4096, q182Preds)
-        run.result
+        try run.result
           .select(lit(tag).as("layout"), col("pred_id"), col("lo"),
             col("hi"), col("n_blocks"), col("n_skipped"),
             col("skip_frac"), col("scanned_rows"), col("matched_rows"))
           .write.mode("overwrite").parquet(s"$adir/$tag")
-        run.release()
+        finally run.release()
         s.read.parquet(s"$adir/$tag")
       }
       // The two layout audits are INDEPENDENT eager sub-pipelines
@@ -2781,6 +2781,13 @@ object ExtendedQueries {
               Future(audit(tag, keys()))
             }),
             scala.concurrent.duration.Duration.Inf)
+        } catch {
+          case t: Throwable =>
+            // interrupt the sibling audit before rethrowing, so it
+            // stops submitting Spark jobs for a query that has failed
+            pool.shutdownNow()
+            pool.awaitTermination(1, java.util.concurrent.TimeUnit.MINUTES)
+            throw t
         } finally pool.shutdown()
       audited.reduceLeft(_.unionAll(_)).orderBy("layout", "pred_id")
     },

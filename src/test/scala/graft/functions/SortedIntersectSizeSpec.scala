@@ -47,4 +47,15 @@ class SortedIntersectSizeSpec extends SparkTestBase {
       .collect().map(r => r.getInt(0) -> (!r.isNullAt(1))).toMap
     assert(out(1) && !out(2))
   }
+
+  test("an array whose elements may be null fails analysis") {
+    val ss = spark
+    import ss.implicits._
+    // Option elements type the array ARRAY<BIGINT> with containsNull
+    val df = Seq((Seq(Option(1L), None), Seq(1L))).toDF("a", "b")
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      df.select(kernel(col("a"), col("b")))
+    }
+    assert(e.getMessage.contains("non-null elements"))
+  }
 }

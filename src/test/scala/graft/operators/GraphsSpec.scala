@@ -1,8 +1,134 @@
 package graft.operators
 
 import graft.SparkTestBase
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 
 class GraphsSpec extends SparkTestBase {
+
+  /** A generated input: the id set and the raw (id_a, id_b) pair rows. */
+  private case class TestGraph(ids: Seq[Long], pairs: Seq[(Long, Long)])
+
+  private def shape(name: String, v: IndexedSeq[Long]): Seq[(Long, Long)] =
+    name match {
+      case "star" => v.tail.map(v.head -> _)
+      case "clique" =>
+        for (i <- v.indices; j <- v.indices if i < j) yield (v(i), v(j))
+      case "chain" => v.indices.tail.map(i => (v(i - 1), v(i)))
+      case "mixed" => // star, clique and chain, bridged into one graph
+        val (a, rest) = v.splitAt(v.size / 3)
+        val (b, c) = rest.splitAt(rest.size / 2)
+        shape("star", a) ++ shape("clique", b) ++ shape("chain", c) ++
+          Seq(a.last -> b.head, b.last -> c.head)
+      case _ => Nil
+    }
+
+  /** One graph of at most 40 nodes drawn from a sparse id range. On top
+    * of the base shape: duplicate and reversed pair rows, self-loops,
+    * pair endpoints dropped from the id set, and isolated ids. "empty"
+    * has no pair rows at all; "loops" has self-loops only.
+    */
+  private def graphGen(name: String): Gen[TestGraph] = for {
+    n <- Gen.choose(6, 40)
+    v <- Gen.pick(n, 1L to 500L).map(_.toIndexedSeq)
+    random <- Gen.listOfN(2 * n, Gen.zip(Gen.oneOf(v), Gen.oneOf(v)))
+    base = if (name == "random") random else shape(name, v)
+    dups <- Gen.someOf(base)
+    reversed <- Gen.someOf(base)
+    loops <- Gen.someOf(v)
+    outside <- Gen.someOf(v).map(_.take(3))
+    isolated <- Gen.listOfN(2, Gen.choose(1000L, 1100L))
+  } yield {
+    val ids = (v.filterNot(outside.contains) ++ isolated).distinct
+    name match {
+      case "empty" => TestGraph(ids, Nil)
+      case "loops" => TestGraph(ids, loops.map(x => (x, x)).toSeq)
+      case _ => TestGraph(ids, base ++ dups.take(3) ++
+        reversed.take(3).map(_.swap) ++ loops.take(2).map(x => (x, x)))
+    }
+  }
+
+  private lazy val graphs: Seq[TestGraph] =
+    Seq("empty", "loops", "star", "clique", "chain", "mixed", "random",
+      "random", "mixed", "chain").zipWithIndex.map { case (name, i) =>
+      graphGen(name).pureApply(Gen.Parameters.default, Seed(i.toLong))
+    }
+
+  /** Property: on every generated graph the driver-local path returns
+    * exactly what the distributed loop (localEdgeMax=0) returns.
+    */
+  private def localEqualsDistributed[T](run: TestGraph => T): Unit =
+    graphs.zipWithIndex.foreach { case (g, i) =>
+      val local = run(g)
+      spark.conf.set("spark.graft.cc.localEdgeMax", "0")
+      val dist =
+        try run(g)
+        finally spark.conf.unset("spark.graft.cc.localEdgeMax")
+      assert(local == dist, s"graph $i: $g")
+    }
+
+  private def frames(g: TestGraph) = {
+    val ss = spark
+    import ss.implicits._
+    (g.ids.toDF("id"), g.pairs.toDF("id_a", "id_b"))
+  }
+
+  test("generated graphs cover the edge cases of the differential tests") {
+    assert(graphs.exists(_.pairs.isEmpty))
+    assert(graphs.exists(_.pairs.exists { case (a, b) => a == b }))
+    assert(graphs.exists(g => g.pairs.distinct.size < g.pairs.size))
+    assert(graphs.exists(g =>
+      g.pairs.exists { case (a, b) => a != b && g.pairs.contains((b, a)) }))
+    assert(graphs.exists(g =>
+      g.pairs.exists(p => !g.ids.contains(p._1) || !g.ids.contains(p._2))))
+    assert(graphs.forall(g => (g.ids ++ g.pairs.flatMap(p => Seq(p._1, p._2)))
+      .distinct.size <= 42)) // <= 40 shape nodes + 2 isolated ids
+  }
+
+  test("property: clustersFromPairs local == distributed on generated graphs") {
+    localEqualsDistributed { g =>
+      val (ids, pairs) = frames(g)
+      Dedup.clustersFromPairs(ids, "id", pairs)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+  }
+
+  test("property: pagerank local == distributed on generated graphs") {
+    localEqualsDistributed { g =>
+      val (ids, pairs) = frames(g)
+      val run = Graphs.pagerankRun(ids, "id", pairs, "id_a", "id_b")
+      try run.result.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      finally run.release()
+    }
+  }
+
+  test("property: triangleStats local == distributed on generated graphs") {
+    localEqualsDistributed { g =>
+      val run = Graphs.triangleRun(frames(g)._2, "id_a", "id_b")
+      try run.result.collect().head.toSeq
+      finally run.release()
+    }
+  }
+
+  test("property: kcoreDegrees local == distributed on generated graphs") {
+    localEqualsDistributed { g =>
+      (1 to 3).map { k =>
+        val run = Graphs.kcoreDegreesRun(frames(g)._2, "id_a", "id_b", k)
+        try run.result.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        finally run.release()
+      }
+    }
+  }
+
+  test("property: labelPropagation local == distributed on generated graphs") {
+    localEqualsDistributed { g =>
+      val (ids, pairs) = frames(g)
+      val run = Graphs.labelPropagationRun(ids, "id", pairs, "id_a", "id_b",
+        rounds = 3)
+      try run.result.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      finally run.release()
+    }
+  }
 
   test("triangleStats: K4 has 6 edges, 12 wedges, 4 triangles") {
     val ss = spark
