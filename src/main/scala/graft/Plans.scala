@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan-evidence dump (optimization rounds): `.explain("formatted")`
   * for each named query into `plans/<tag>/<query>_<suffix>.txt`.
@@ -8,28 +7,20 @@ import org.apache.spark.sql.SparkSession
   *        SPARK_GRAFT_PLAN_TAG=r19 SPARK_GRAFT_PLAN_SUFFIX=before \
   *        sbt "runMain graft.Plans"
   *
-  * Same session shape as Bench so the dumped plan is the benched plan.
+  * Same session as Bench ([[LocalSession]]) so the dumped plan is the
+  * benched plan.
   * Queries whose builder performs eager staging (scratch writes) run
   * that staging here too — the dump reflects the final returned frame.
   */
 object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val tag = sys.env.getOrElse("SPARK_GRAFT_PLAN_TAG", "r19")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "before")
     val filter = sys.env.get("SPARK_GRAFT_PLANS")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .getOrElse(Set.empty)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     val outDir = java.nio.file.Paths.get(s"plans/$tag")
     java.nio.file.Files.createDirectories(outDir): Unit
     SparkEntry.queries

@@ -171,6 +171,40 @@ object ScratchSpace {
     } finally in.close()
   }
 
+  /** Write `df` as ONE parquet file at `destDir/name` and return its
+    * byte size: a `coalesce(1)` write to a fresh scratch stage, its
+    * single part file copied in, the stage removed. The fixture and
+    * watch-dir feed primitive (planted Delta/Iceberg data files,
+    * streaming sentinels and shards).
+    */
+  def writeOneFile(
+      df: org.apache.spark.sql.DataFrame, destDir: String,
+      name: String): Long = {
+    val spark = df.sparkSession
+    val stage = dir(spark, "one_file_")
+    df.coalesce(1).write.mode("overwrite").parquet(stage)
+    copyIn(spark, onePartFile(spark, stage), destDir, name)
+    delete(spark, stage)
+    val out = new Path(destDir, name)
+    out.getFileSystem(spark.sessionState.newHadoopConf())
+      .getFileStatus(out).getLen
+  }
+
+  /** The single `part-` file a `coalesce(1)` write left in `stage`;
+    * throws when there is none or more than one, so a broken stage
+    * never feeds a partial or empty file downstream.
+    */
+  private[graft] def onePartFile(spark: SparkSession, stage: String): String = {
+    val p = new Path(stage)
+    val parts = p.getFileSystem(spark.sessionState.newHadoopConf())
+      .listStatus(p)
+      .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
+    if (parts.length != 1)
+      throw new IllegalStateException(
+        s"expected exactly one part file in $stage, found ${parts.length}")
+    parts.head.getPath.toString
+  }
+
   /** Sorted (relative name, md5-of-bytes) of every data file under
     * each immediate subdirectory of `dir` — the partition-grain
     * byte-stability fingerprint (q168), via the Hadoop FS API so it

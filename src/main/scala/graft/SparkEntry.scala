@@ -33,3 +33,24 @@ object SparkEntry {
   def oracleSql: Map[String, String] =
     registry.flatMap(q => q.oracle.map(sql => q.name -> sql)).toMap
 }
+
+/** The one local session the driver mains (Bench, Verify, Plans) run
+  * in, so the benched, verified and dumped plans share one conf:
+  * `local[cpus]`, shuffle partitions = cpus, UTC, nanosAsLong, UI off,
+  * WARN logging. `cpus` is `SPARK_GRAFT_CPUS` (default 32).
+  */
+private[graft] object LocalSession {
+  val cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+
+  def apply(): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+}

@@ -142,6 +142,7 @@ object Main {
       flags: Map[String, String],
       out: String => Unit,
       err: String => Unit): Unit = {
+    // Not LocalSession: perfbench calls this in its own session, whose SQL confs .config would overwrite.
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[2]"))
       .config("spark.ui.enabled", "false")

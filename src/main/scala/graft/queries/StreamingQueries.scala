@@ -4,6 +4,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryProgress}
 import org.apache.spark.sql.types._
 
 import graft.streaming.{AttrEvent, CapEvent, StreamEvent, StreamingOps}
@@ -79,6 +80,12 @@ object StreamingQueries {
 
   private val GapMs = 1800000L
 
+  /** Sentinel rows: event time steps 1 s up from here, far past any
+    * real event, and ids count down from -1 (the queries drop them by
+    * key sign or type).
+    */
+  private val SentinelNs = 4000000000000000000L
+
   /** Pre-built one-row sentinel parquet files, keyed by
     * (data dir, tsNs, id). Every drain-protocol parity appends the
     * IDENTICAL far-future literal row (same schema, same physical ts
@@ -111,14 +118,12 @@ object StreamingQueries {
       import s.implicits._
       val enc = eventsEncoding(s, dir)
       val stage = Scratch.dir(s, "sentinel_")
-      Seq((id, tsNs, id, "sentinel", 0.0, "{}"))
-        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .withColumn("ts", enc.tsLit(tsNs))
-        .coalesce(1).write.mode("overwrite").parquet(stage)
-      val p = new org.apache.hadoop.fs.Path(stage)
-      p.getFileSystem(s.sessionState.newHadoopConf())
-        .listStatus(p).map(_.getPath)
-        .find(_.getName.startsWith("part-")).get.toString
+      graft.ScratchSpace.writeOneFile(
+        Seq((id, tsNs, id, "sentinel", 0.0, "{}"))
+          .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+          .withColumn("ts", enc.tsLit(tsNs)),
+        stage, "sentinel.parquet"): Unit
+      s"$stage/sentinel.parquet"
     }
     val cached = sentinelCache.get(key)
     if (cached != null && exists(cached)) cached
@@ -129,20 +134,26 @@ object StreamingQueries {
     }
   }
 
-  /** The drain protocol's sentinel step: copy the pre-built sentinel
-    * file into `watch` (unique name per id, so two sentinel batches
-    * coexist with the data files).
+  /** The sentinel batches a memory-sink drain appends after the data:
+    * `count` one-row files into `watch`, each parsed with `dir`'s
+    * events encoding. 1 serves watermark-evicted operators (the
+    * sentinel batch plus its no-data follow-up seal every row); 2
+    * serves event-time timers (the first advances the watermark, the
+    * second fires the timeouts).
     */
-  private def sentinelAppend(
-      s: SparkSession, dir: String, watch: String,
-      tsNs: Long, id: Long): () => Unit = () => {
-    // Sign-encoded file name: ids +k and -k with the same tsNs must
-    // not collide — the file-stream source tracks seen files by PATH,
-    // so a colliding second sentinel batch would silently never fire.
-    val idName = if (id < 0) s"m${-id}" else id.toString
+  private[graft] final case class Sentinels(
+      count: Int, dir: String, watch: String)
+
+  /** Copy sentinel `k` (0-based) into `watch`: event time
+    * [[SentinelNs]] + k s, id -(k+1), file `sentinel_<tsNs>_m<k+1>`
+    * (a distinct path per sentinel — the file-stream source tracks
+    * seen files by path, so a reused name would never fire).
+    */
+  private def sentinelAppend(s: SparkSession, sn: Sentinels, k: Int): Unit = {
+    val tsNs = SentinelNs + k * 1000000000L
     graft.ScratchSpace.copyIn(
-      s, sentinelFile(s, dir, tsNs, id), watch,
-      s"sentinel_${tsNs}_$idName.parquet")
+      s, sentinelFile(s, sn.dir, tsNs, -(k + 1L)), sn.watch,
+      s"sentinel_${tsNs}_m${k + 1}.parquet")
   }
 
   /** Attribution window (2 days) — must match q150's batch constant so
@@ -162,46 +173,135 @@ object StreamingQueries {
     watch
   }
 
-  /** Run a streaming DataFrame to a memory sink and return the sink
-    * table. Fixed per-query sink names (dropped before reuse) cap the
-    * driver-side memory at one result set per query across repeated
-    * Bench/Verify invocations. `extraBatches` actions each trigger one
-    * more micro-batch (the sentinel/watermark drain protocol).
+  /** What one drain measured from its query's `recentProgress`, over
+    * the micro-batches that executed (those with an `addBatch` phase;
+    * idle-trigger reports carry none): the batch count, the stateful
+    * operator count, Σ `numRowsTotal` over batches and operators, and
+    * the per-phase `durationMs` sums.
     */
-  private def drainToTable(
+  final case class DrainStats(
+      batches: Int, statefulOps: Int, stateRows: Long,
+      phasesMs: Seq[(String, Long)]) {
+    override def toString: String =
+      s"$batches batches, $statefulOps stateful ops, $stateRows state rows, " +
+        phasesMs.map { case (k, v) => s"$k=$v" }.mkString(" ") + " ms"
+  }
+
+  object DrainStats {
+    val Phases: Seq[String] = Seq(
+      "addBatch", "queryPlanning", "walCommit", "commitOffsets",
+      "triggerExecution")
+
+    def apply(progress: Array[StreamingQueryProgress]): DrainStats = {
+      val ran = progress.filter(_.durationMs.containsKey("addBatch"))
+      DrainStats(
+        ran.length,
+        ran.map(_.stateOperators.length).maxOption.getOrElse(0),
+        ran.iterator.flatMap(_.stateOperators).map(_.numRowsTotal).sum,
+        Phases.map { ph =>
+          ph -> ran.map(p => Option(p.durationMs.get(ph)).fold(0L)(_.longValue)).sum
+        })
+    }
+  }
+
+  private val log =
+    org.slf4j.LoggerFactory.getLogger("graft.queries.StreamingQueries")
+
+  private val drainLog =
+    new java.util.concurrent.ConcurrentHashMap[String, DrainStats]()
+
+  /** The latest run's [[DrainStats]] per drained query, keyed by the
+    * query's short name ("q51"); Bench reads it for `stream_drains`.
+    */
+  def drains: Map[String, DrainStats] = {
+    import scala.jdk.CollectionConverters._
+    drainLog.asScala.toMap
+  }
+
+  /** Run a started query through every available file, then through
+    * each of `steps` (each step lands new input and gets its own
+    * micro-batches); record its [[DrainStats]] under `name` and log
+    * them as one INFO line; stop it.
+    */
+  private def runDrain(
+      name: String, q: StreamingQuery, steps: Seq[() => Unit]): Unit =
+    try {
+      q.processAllAvailable()
+      steps.foreach { step => step(); q.processAllAvailable() }
+      val stats = DrainStats(q.recentProgress)
+      drainLog.put(name, stats)
+      log.info(s"$name: $stats")
+    } finally q.stop()
+
+  /** Stateful micro-batches pay a per-state-store-partition overhead
+    * EVERY batch; at parity-check state sizes the session's width of
+    * tiny state partitions dominates runtime, so memory-sink drains run
+    * at this fixed shuffle width (captured by the query at start). A
+    * stateful query's state-store partition count is pinned by the
+    * FIRST run of its checkpoint; drains here always start fresh
+    * per-run checkpoints.
+    */
+  private val DrainShufflePartitions = "2"
+
+  /** Run a streaming DataFrame to a memory sink and return the sink
+    * table: the data batch, then `lateBatch` (input landed after the
+    * data, q202's replay), then `sentinels`, each draining to
+    * completion. The drain scopes `spark.sql.shuffle.partitions` to
+    * [[DrainShufflePartitions]] plus `confs`, restoring every previous
+    * value afterwards, also when the query throws. Fixed per-query sink
+    * names (dropped before reuse) cap the driver-side memory at one
+    * result set per query across repeated Bench/Verify invocations;
+    * queries run one at a time per session (fixed sink names would
+    * collide under concurrent invocation of the SAME query).
+    */
+  private[graft] def drainToTable(
       s: SparkSession,
       name: String,
       out: DataFrame,
       mode: String,
-      extraBatches: Seq[() => Unit] = Nil): DataFrame = {
+      sentinels: Option[Sentinels] = None,
+      lateBatch: Option[() => Unit] = None,
+      confs: Map[String, String] = Map.empty): DataFrame = {
     s.catalog.dropTempView(name): Unit
-    // Stateful micro-batches pay a per-state-store-partition overhead
-    // EVERY batch; at parity-check state sizes 32 partitions of tiny
-    // state dominate runtime, so the drain runs with a small fixed
-    // count (captured by the query at start; restored after). A
-    // production deployment sizes this to its real state volume
-    // instead — the default (2; was a fixed 8 before round 19) serves
-    // only the tiny-state parity harness. NOTE: a stateful query's
-    // state-store partition count is pinned by the FIRST run of its
-    // checkpoint; drains here always start fresh per-run checkpoints,
-    // so the default change is safe in-repo, but an externally reused
-    // checkpoint created under another width must keep its original
-    // conf value. Assumes the driver-contract execution model: queries
-    // run one at a time per session (fixed sink names would collide
-    // under concurrent invocation of the SAME query).
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions",
-      s.conf.getOption("spark.graft.stream.drainShufflePartitions")
-        .getOrElse("2"))
+    val scoped = confs + ("spark.sql.shuffle.partitions" -> DrainShufflePartitions)
+    val prev = scoped.keys.map(k => k -> s.conf.getOption(k)).toMap
+    scoped.foreach { case (k, v) => s.conf.set(k, v) }
     try {
-      val q = out.writeStream.format("memory").queryName(name)
-        .outputMode(mode).start()
-      try {
-        q.processAllAvailable()
-        extraBatches.foreach { f => f(); q.processAllAvailable() }
-      } finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      val sentinelSteps = sentinels.toSeq.flatMap { sn =>
+        (0 until sn.count).map(k => () => sentinelAppend(s, sn, k))
+      }
+      runDrain(name.takeWhile(_ != '_'),
+        out.writeStream.format("memory").queryName(name)
+          .outputMode(mode).start(),
+        lateBatch.toSeq ++ sentinelSteps)
+    } finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
     s.table(name)
+  }
+
+  /** The `foreachBatch` drain: each of `shards` staged as one parquet
+    * file in a fresh watch dir, fed one file per trigger
+    * (`maxFilesPerTrigger=1`, so one micro-batch per shard) through
+    * `sink` with its checkpoint at `ckpt`, run to completion.
+    */
+  private def drainForeachBatch(
+      s: SparkSession,
+      name: String,
+      shards: Seq[DataFrame],
+      ckpt: String,
+      sink: (DataFrame, Long) => Unit): Unit = {
+    val watch = Scratch.dir(s, s"${name}_watch_")
+    shards.zipWithIndex.foreach { case (shard, k) =>
+      graft.ScratchSpace.writeOneFile(shard, watch, f"shard_$k%03d.parquet"): Unit
+    }
+    runDrain(name,
+      s.readStream.schema(shards.head.schema)
+        .option("maxFilesPerTrigger", "1").parquet(watch)
+        .writeStream.option("checkpointLocation", ckpt)
+        .foreachBatch(sink).start(),
+      Nil)
   }
 
   /** Streaming stateful sessionization over the events table. Sentinel
@@ -222,16 +322,11 @@ object StreamingQueries {
         .select(col("user_id"), enc.tsMs.as("ts"),
           col("event_type"), col("value"))
         .as[StreamEvent]
-      def sentinel(tsNs: Long, id: Long): () => Unit =
-        sentinelAppend(s, dir, watch, tsNs, id)
-      // two extra micro-batches: the first advances the watermark far
-      // past every timeout, the second triggers the timeout emission
       drainToTable(s, "q51_mem",
         StreamingOps.sessionize(evs, GapMs, watermarkDelay = "0 seconds")
           .toDF(),
         "append",
-        Seq(sentinel(4000000000000000000L, -1L),
-          sentinel(4000000001000000000L, -2L)))
+        sentinels = Some(Sentinels(2, dir, watch)))
         .where(col("user_id") >= 0)
         .withColumn("session_seq",
           row_number().over(
@@ -420,8 +515,6 @@ object StreamingQueries {
       val watch = watchDirWith(s, dir, "events.parquet" -> "events_000.parquet")
       val evs = s.readStream.schema(enc.schema).parquet(watch)
         .select(enc.tsMs.as("ts"), col("user_id"))
-      def sentinel(tsNs: Long, id: Long): () => Unit =
-        sentinelAppend(s, dir, watch, tsNs, id)
       // ONE sentinel: both stateful ops (watermarked dedup + windowed
       // count) evict on the WATERMARK alone — no event-time timers —
       // so the sentinel batch plus its no-data follow-up seals every
@@ -431,7 +524,7 @@ object StreamingQueries {
         StreamingOps.windowedDistinctUsers(
           evs, watermarkDelay = "10 minutes", windowLen = "1 hour"),
         "append",
-        Seq(sentinel(4000000000000000000L, -1L)))
+        sentinels = Some(Sentinels(1, dir, watch)))
         .select(unix_millis(col("window_start")).as("window_start_ms"),
           col("n_users"))
         .where(col("window_start_ms") < 3000000000000L) // drop sentinels
@@ -468,8 +561,6 @@ object StreamingQueries {
           .where(col("event_type") === tpe ||
             col("event_type") === "sentinel")
           .select(col("user_id"), enc.tsMs.as("ts"), col("event_type"))
-      def sentinel(tsNs: Long, id: Long): () => Unit =
-        sentinelAppend(s, dir, watch, tsNs, id)
       // ONE sentinel batch drains a stream-stream join: outer-side
       // eviction is purely WATERMARK-driven (no event-time timers), so
       // the far-future row advances the watermark and the no-data
@@ -485,7 +576,7 @@ object StreamingQueries {
           windowMs = GapMs, watermarkDelay = "0 seconds",
           joinType = "left_outer"),
         "append",
-        Seq(sentinel(4000000000000000000L, -1L)))
+        sentinels = Some(Sentinels(1, dir, watch)))
         .where(col("l_key") >= 0 && col("l_type") === "error" &&
           (col("r_type").isNull || col("r_type") === "click"))
         .groupBy(col("l_key").as("user_id"),
@@ -528,8 +619,6 @@ object StreamingQueries {
           .where(col("event_type") === tpe ||
             col("event_type") === "sentinel")
           .select(col("user_id"), enc.tsMs.as("ts"), col("event_type"))
-      def sentinel(tsNs: Long, id: Long): () => Unit =
-        sentinelAppend(s, dir, watch, tsNs, id)
       // ONE sentinel drains the join — watermark-driven eviction, same
       // rationale as q130 above.
       drainToTable(s, "q189_mem",
@@ -539,7 +628,7 @@ object StreamingQueries {
           windowMs = GapMs, watermarkDelay = "0 seconds",
           joinType = "full_outer"),
         "append",
-        Seq(sentinel(4000000000000000000L, -1L)))
+        sentinels = Some(Sentinels(1, dir, watch)))
         .where(
           (col("l_type").isNull ||
             (col("l_type") === "error" && col("l_key") >= 0)) &&
@@ -583,14 +672,11 @@ object StreamingQueries {
         .select(col("user_id").as("key"), enc.tsMs.as("ts"),
           col("event_id").as("tie"))
         .as[CapEvent]
-      def sentinel(tsNs: Long, id: Long): () => Unit =
-        sentinelAppend(s, dir, watch, tsNs, id)
       drainToTable(s, "q132_mem",
         StreamingOps.perKeyCapByEventTime(
           evs, cap = 3, watermarkDelay = "0 seconds").toDF(),
         "append",
-        Seq(sentinel(4000000000000000000L, -1L),
-          sentinel(4000000001000000000L, -2L)))
+        sentinels = Some(Sentinels(2, dir, watch)))
         .where(col("key") >= 0)
         .select(col("key").as("user_id"), col("seq"), col("ms"),
           col("tie").as("event_id"))
@@ -662,8 +748,6 @@ object StreamingQueries {
       val watch = watchDirWith(s, dir, "events.parquet" -> "events_000.parquet")
       val evs = s.readStream.schema(enc.schema).parquet(watch)
         .select(enc.tsMs.as("ts"), col("user_id"))
-      def sentinel(tsNs: Long, id: Long): () => Unit =
-        sentinelAppend(s, dir, watch, tsNs, id)
       // ONE sentinel: session_window is a watermark-evicted
       // aggregation (no timers) — the sentinel + no-data follow-up
       // batch seals every real session (q130 rationale).
@@ -671,7 +755,7 @@ object StreamingQueries {
         StreamingOps.sessionWindowCounts(
           evs, GapMs, watermarkDelay = "0 seconds"),
         "append",
-        Seq(sentinel(4000000000000000000L, -1L)))
+        sentinels = Some(Sentinels(1, dir, watch)))
         .where(col("user_id") >= 0)
         .select(col("user_id"), col("start_ms"), col("end_ms"),
           col("n_events"))
@@ -716,15 +800,12 @@ object StreamingQueries {
           col("event_type"),
           floor(col("value") * 100.0 + 0.5).cast("long").as("cents"))
         .as[AttrEvent]
-      def sentinel(tsNs: Long, id: Long): () => Unit =
-        sentinelAppend(s, dir, watch, tsNs, id)
       drainToTable(s, "q153_mem",
         StreamingOps.lastTouchAttribution(
           evs, touchType = "click", convType = "purchase",
           windowMs = AttrWindowMs, watermarkDelay = "0 seconds").toDF(),
         "append",
-        Seq(sentinel(4000000000000000000L, -1L),
-          sentinel(4000000001000000000L, -2L)))
+        sentinels = Some(Sentinels(2, dir, watch)))
         .where(col("user_id") >= 0)
         .select(col("event_id"), col("user_id"), col("ms"),
           col("value_cents"), col("touch_id"), col("touch_age"),
@@ -766,28 +847,13 @@ object StreamingQueries {
     (s, dir) => {
       val d = graft.Tables(s, dir, "documents")
         .select(col("doc_id"), col("text"))
-      val watch = Scratch.dir(s, "q196_watch_")
       val state = Scratch.dir(s, "q196_state_")
       StreamingOps.seedNearDupState(
         d.where(lit(false)), state, "doc_id", "text")
-      val hc = s.sessionState.newHadoopConf()
-      (0 until 3).foreach { k =>
-        val stage = s"$state/stage$k"
-        d.where(col("doc_id") % 3 === k)
-          .coalesce(1).write.mode("overwrite").parquet(stage)
-        val p = new org.apache.hadoop.fs.Path(stage)
-        val part = p.getFileSystem(hc).listStatus(p).map(_.getPath)
-          .find(_.getName.startsWith("part-")).get
-        graft.ScratchSpace.copyIn(s, part.toString, watch,
-          f"docs_$k%03d.parquet")
-      }
-      val sink = StreamingOps.nearDupSink(state, "doc_id", "text",
-        threshold = 0.6)
-      val q = s.readStream.schema(d.schema)
-        .option("maxFilesPerTrigger", "1").parquet(watch)
-        .writeStream.option("checkpointLocation", s"$state/ckpt")
-        .foreachBatch(sink).start()
-      try q.processAllAvailable() finally q.stop()
+      drainForeachBatch(s, "q196",
+        (0 until 3).map(k => d.where(col("doc_id") % 3 === k)),
+        s"$state/ckpt",
+        StreamingOps.nearDupSink(state, "doc_id", "text", threshold = 0.6))
       StreamingOps.nearDupPairs(s, state).orderBy("id_a", "id_b")
     },
     Some(s"""
@@ -821,18 +887,14 @@ object StreamingQueries {
       val evs = s.readStream.schema(enc.schema).parquet(watch)
         .select(enc.tsMs.as("ts"), col("event_type"),
           floor(col("value") * 100.0 + 0.5).as("value"))
-      def sentinel(tsNs: Long, id: Long): () => Unit =
-        sentinelAppend(s, dir, watch, tsNs, id)
-      val lateReplay: () => Unit = () =>
-        raw.where(unix_millis(enc.tsMs) < cutMs)
-          .write.mode("append").parquet(watch)
       drainToTable(s, "q202_mem",
         StreamingOps.windowedCounts(
           evs, watermarkDelay = "0 seconds", windowLen = "1 hour"),
         "append",
-        Seq(lateReplay,
-          sentinel(4000000000000000000L, -1L),
-          sentinel(4000000001000000000L, -2L)))
+        sentinels = Some(Sentinels(2, dir, watch)),
+        lateBatch = Some(() =>
+          raw.where(unix_millis(enc.tsMs) < cutMs)
+            .write.mode("append").parquet(watch)))
         .where(col("event_type") =!= "sentinel")
         .select(
           unix_millis(col("window_start")).as("window_start_ms"),
@@ -865,29 +927,12 @@ object StreamingQueries {
       val cents = floor(col("value") * 100.0 + 0.5).cast("long")
       val src = s.read.schema(enc.schema).parquet(s"$dir/events.parquet")
         .select(col("user_id"), cents.as("cents"))
-      val watch = Scratch.dir(s, "q216_watch_")
       val state = Scratch.dir(s, "q216_state_")
       StreamingOps.seedCountSumState(src, state, "user_id", "cents")
-      val hc = s.sessionState.newHadoopConf()
-      (0 until 3).foreach { k =>
-        val stage = s"$state/stage$k"
-        src.where(pmod(col("user_id"), lit(3)) === k)
-          .coalesce(1).write.mode("overwrite").parquet(stage)
-        val p = new org.apache.hadoop.fs.Path(stage)
-        val part = p.getFileSystem(hc).listStatus(p).map(_.getPath)
-          .find(_.getName.startsWith("part-")).get
-        graft.ScratchSpace.copyIn(s, part.toString, watch,
-          f"ev_$k%03d.parquet")
-      }
-      val sink = StreamingOps.countSumSink(state, "user_id", "cents")
-      val q = s.readStream
-        .schema(StructType(Seq(
-          StructField("user_id", LongType),
-          StructField("cents", LongType))))
-        .option("maxFilesPerTrigger", "1").parquet(watch)
-        .writeStream.option("checkpointLocation", s"$state/ckpt")
-        .foreachBatch(sink).start()
-      try q.processAllAvailable() finally q.stop()
+      drainForeachBatch(s, "q216",
+        (0 until 3).map(k => src.where(pmod(col("user_id"), lit(3)) === k)),
+        s"$state/ckpt",
+        StreamingOps.countSumSink(state, "user_id", "cents"))
       StreamingOps.countSumState(s, state, "user_id")
         .orderBy("user_id")
     },
@@ -917,28 +962,14 @@ object StreamingQueries {
         .select(col("user_id"), enc.tsMs.as("ts"),
           col("event_type"), col("value"))
         .as[StreamEvent]
-      def sentinel(tsNs: Long, id: Long): () => Unit =
-        sentinelAppend(s, dir, watch, tsNs, id)
-      val providerKey = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(providerKey)
-      s.conf.set(providerKey,
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
-      val drained =
-        try {
-          drainToTable(s, "q223_mem",
-            StreamingOps.sessionizeTws(evs, GapMs,
-              watermarkDelay = "0 seconds").toDF(),
-            "append",
-            Seq(sentinel(4000000000000000000L, -1L),
-              sentinel(4000000001000000000L, -2L)))
-        } finally {
-          prev match {
-            case Some(p) => s.conf.set(providerKey, p)
-            case None => s.conf.unset(providerKey)
-          }
-        }
-      drained
+      drainToTable(s, "q223_mem",
+        StreamingOps.sessionizeTws(evs, GapMs,
+          watermarkDelay = "0 seconds").toDF(),
+        "append",
+        sentinels = Some(Sentinels(2, dir, watch)),
+        confs = Map("spark.sql.streaming.stateStore.providerClass" ->
+          ("org.apache.spark.sql.execution.streaming.state." +
+            "RocksDBStateStoreProvider")))
         .where(col("user_id") >= 0)
         .withColumn("session_seq",
           row_number().over(
@@ -965,33 +996,14 @@ object StreamingQueries {
     "q236_stream_delta_sink_parity",
     (s, dir) => {
       import graft.sources.{DeltaRead, DeltaWrite}
-      val docsSchema = StructType(Seq(
-        StructField("doc_id", LongType),
-        StructField("text", StringType),
-        StructField("lang", StringType)))
       val src = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("text"), col("lang"))
-      val watch = Scratch.dir(s, "q236_watch_")
       val table = Scratch.dir(s, "q236_table_")
-      val ckpt = Scratch.dir(s, "q236_ckpt_")
-      val hc = s.sessionState.newHadoopConf()
-      (0 until 2).foreach { k =>
-        val stage = Scratch.dir(s, s"q236_stage${k}_")
-        src.where(pmod(col("doc_id"), lit(2)) === k)
-          .coalesce(1).write.mode("overwrite").parquet(stage)
-        val p = new org.apache.hadoop.fs.Path(stage)
-        val part = p.getFileSystem(hc).listStatus(p).map(_.getPath)
-          .find(_.getName.startsWith("part-")).get
-        graft.ScratchSpace.copyIn(s, part.toString, watch,
-          f"docs_$k%03d.parquet")
-      }
       val appId = "q236app"
-      val sink = graft.streaming.StreamingOps.deltaAppendSink(table, appId)
-      val q = s.readStream.schema(docsSchema)
-        .option("maxFilesPerTrigger", "1").parquet(watch)
-        .writeStream.option("checkpointLocation", ckpt)
-        .foreachBatch(sink).start()
-      try q.processAllAvailable() finally q.stop()
+      drainForeachBatch(s, "q236",
+        (0 until 2).map(k => src.where(pmod(col("doc_id"), lit(2)) === k)),
+        Scratch.dir(s, "q236_ckpt_"),
+        StreamingOps.deltaAppendSink(table, appId))
       // crash-replay immunity: re-offer batch 0's exact content under
       // its original txn version — must no-op
       val replay = DeltaWrite.idempotentAppend(
@@ -1419,35 +1431,15 @@ object StreamingQueries {
     "q282_stream_iceberg_sink_parity",
     (s, dir) => {
       import graft.sources.{IcebergRead, IcebergWrite}
-      val docsSchema = StructType(Seq(
-        StructField("doc_id", LongType),
-        StructField("text", StringType),
-        StructField("lang", StringType)))
       val src = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("text"), col("lang"))
-      val watch = Scratch.dir(s, "q282_watch_")
       val table = Scratch.dir(s, "q282_table_")
-      val ckpt = Scratch.dir(s, "q282_ckpt_")
-      val hc = s.sessionState.newHadoopConf()
-      (0 until 2).foreach { k =>
-        val stage = Scratch.dir(s, s"q282_stage${k}_")
-        src.where(pmod(col("doc_id"), lit(2)) === k)
-          .coalesce(1).write.mode("overwrite").parquet(stage)
-        val p = new org.apache.hadoop.fs.Path(stage)
-        val part = p.getFileSystem(hc).listStatus(p).map(_.getPath)
-          .find(_.getName.startsWith("part-")).get
-        graft.ScratchSpace.copyIn(s, part.toString, watch,
-          f"docs_$k%03d.parquet")
-      }
       val appId = "q282app"
-      val q = s.readStream.schema(docsSchema)
-        .option("maxFilesPerTrigger", "1").parquet(watch)
-        .writeStream.option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          IcebergWrite.idempotentAppend(batch, table, appId,
-            batchId): Unit
-        }.start()
-      try q.processAllAvailable() finally q.stop()
+      drainForeachBatch(s, "q282",
+        (0 until 2).map(k => src.where(pmod(col("doc_id"), lit(2)) === k)),
+        Scratch.dir(s, "q282_ckpt_"),
+        (batch, batchId) =>
+          IcebergWrite.idempotentAppend(batch, table, appId, batchId): Unit)
       // crash-replay immunity: re-offer batch 0 under its original
       // txn version — must no-op
       require(IcebergWrite.idempotentAppend(
@@ -1469,30 +1461,4 @@ object StreamingQueries {
     Seq(q51, q52, q58, q59, q78, q108, q130, q132, q139, q140, q153, q189,
       q196, q202, q216, q223, q236, q238, q245, q248, q250, q258, q277,
       q281, q282)
-
-  /** Drain-protocol cost model (SURVEY §6): per parity query, the
-    * FIXED (micro-batches, stateful operators) the harness pays
-    * regardless of data volume. batches = 1 initial
-    * processAllAvailable + one per sentinel extraBatch; ops = stateful
-    * operators in the streaming plan (each commits its state store
-    * across the drain's 8 partitions every batch; the q78 static join
-    * itself is stateless — its Complete-mode aggregate is the one
-    * stateful op). Bench divides warm seconds by batches×ops to
-    * separate the s/op-batch harness constant from engine time.
-    * Maintained WITH the queries: a protocol change (extra sentinel,
-    * added stateful stage) must update its entry here.
-    */
-  val costModel: Map[String, (Int, Int)] = Map(
-    "q51_stream_sessionize_parity" -> ((3, 1)),
-    "q52_stream_window_parity" -> ((1, 1)),
-    "q58_stream_dedup_parity" -> ((1, 1)),
-    "q59_stream_interval_join_parity" -> ((1, 2)),
-    "q78_stream_static_join_parity" -> ((1, 1)),
-    "q108_stream_distinct_users_parity" -> ((2, 2)),
-    "q130_stream_leftouter_join_parity" -> ((2, 2)),
-    "q132_stream_per_key_cap_parity" -> ((3, 1)),
-    "q139_stream_sliding_window_parity" -> ((1, 1)),
-    "q140_stream_session_window_parity" -> ((2, 1)),
-    "q153_stream_attribution_parity" -> ((3, 1)),
-    "q223_stream_tws_sessionize_parity" -> ((3, 1)))
 }

@@ -1,7 +1,6 @@
 package graft.sources
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -293,29 +292,13 @@ object DeltaFixture {
       (mapper.writeValueAsString(lc) + "\n").getBytes("UTF-8"))
   }
 
-  /** Write `df` as ONE parquet file at `tablePath/name` (staged via
-    * scratch — the tiny fixture-planting single-file write, same
-    * class as the streaming parity staging writes) and return its
-    * byte size for the add action.
+  /** Write `df` as ONE parquet file at `tablePath/name` and return its
+    * byte size for the add action ([[graft.ScratchSpace.writeOneFile]]).
     */
   def plantDataFile(
       spark: SparkSession,
       df: DataFrame,
       tablePath: String,
-      name: String): Long = {
-    val stage = graft.ScratchSpace.dir(spark, "delta_plant_")
-    df.coalesce(1).write.mode("overwrite").parquet(stage)
-    val sp = new Path(stage)
-    val fs = sp.getFileSystem(spark.sessionState.newHadoopConf())
-    val part = fs.listStatus(sp)
-      .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
-      .map(_.getPath)
-      .headOption
-      .getOrElse(throw new IllegalStateException(s"no part file in $stage"))
-    graft.ScratchSpace.copyIn(spark, part.toString, tablePath, name)
-    graft.ScratchSpace.delete(spark, stage)
-    val out = new Path(tablePath, name)
-    out.getFileSystem(spark.sessionState.newHadoopConf())
-      .getFileStatus(out).getLen
-  }
+      name: String): Long =
+    graft.ScratchSpace.writeOneFile(df, tablePath, name)
 }

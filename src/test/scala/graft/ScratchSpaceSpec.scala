@@ -57,6 +57,22 @@ class ScratchSpaceSpec extends SparkTestBase {
     assert(ScratchSpace.root(spark) == default)
   }
 
+  test("writeOneFile leaves exactly one file; a stage without a part file fails loudly") {
+    val d = ScratchSpace.dir(spark, "one_file_spec_")
+    val len = ScratchSpace.writeOneFile(
+      spark.range(10).repartition(3).toDF("id"), d, "one.parquet")
+    val p = new org.apache.hadoop.fs.Path(d)
+    val files = p.getFileSystem(spark.sessionState.newHadoopConf())
+      .listStatus(p).filterNot(_.getPath.getName.startsWith("."))
+    assert(files.map(_.getPath.getName).toSeq == Seq("one.parquet"))
+    assert(files.head.getLen == len)
+    assert(spark.read.parquet(s"$d/one.parquet").count() == 10)
+    val empty = ScratchSpace.dir(spark, "empty_stage_")
+    val e = intercept[IllegalStateException](
+      ScratchSpace.onePartFile(spark, empty))
+    assert(e.getMessage.contains("found 0"))
+  }
+
   test("writeBytes/readBytes/delete roundtrip through the s3a scheme") {
     withS3aScratch { mockRoot =>
       val d = ScratchSpace.dir(spark, "rw_")
