@@ -7,6 +7,8 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.DatasetCatalog
+
 /** Metadata-only parquet statistics — answering min/max/count questions
   * from FOOTERS alone, without reading a single data page.
   *
@@ -19,13 +21,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * O(files) footer reads, zero data IO, instead of a full scan.
   *
   * Scale shape: the driver lists only the IMMEDIATE children of the
-  * root (one listStatus page — O(top-level dirs + root files) names,
-  * never the full tree), then each executor task expands its subtree
-  * recursively and reads footers, so a 10^8-object lake holds at most
-  * one directory level of names on the driver while footer reads
-  * parallelize across the cluster. Each footer read is a few KB of IO
-  * regardless of file size. The returned frame is row-group-grained;
-  * callers aggregate to file or partition grain.
+  * root (the [[graft.sources.DatasetCatalog.walk]] at depth 1 —
+  * O(top-level dirs + root files) names, never the full tree), then
+  * each executor task walks its subtree and reads footers, so a
+  * 10^8-object lake holds at most one directory level of names on the
+  * driver while footer reads parallelize across the cluster. Each
+  * footer read is a few KB of IO regardless of file size. The returned
+  * frame is row-group-grained; callers aggregate to file or partition
+  * grain.
   *
   * Reference behavior anchor: the reference engine's blueprints
   * enumerate S3 objects and act on names/sizes only
@@ -57,10 +60,11 @@ object Meta {
     // of the root. Child directories become executor work units that
     // expand their own subtree remotely; only root-level file names
     // and first-level dir names ever live in a driver Seq.
-    val units = fs.listStatus(rootPath).iterator
-      .filter(st => st.isDirectory || isDataFile(st.getPath.getName))
-      .filterNot(_.getPath.getName.startsWith("_"))
-      .map(_.getPath.toString)
+    val units = DatasetCatalog.walk(fs, rootPath, maxDepth = 1)
+      .collect { case (st, name) if !name.startsWith("_") &&
+        (st.isDirectory || isDataFile(name)) =>
+        (st.getPath.toString, st.isDirectory)
+      }
       .toSeq
     // The SESSION Hadoop conf rides to executors (spark.hadoop.* keys,
     // S3A credentials/endpoints, fs.* impl overrides) — a fresh
@@ -74,18 +78,15 @@ object Meta {
       .repartition(math.min(nUnits, spark.sparkContext.defaultParallelism))
       .mapPartitions { paths =>
         val conf = confBc.value.value
-        paths.flatMap { unit =>
+        paths.flatMap { case (unit, isDir) =>
           val unitPath = new Path(unit)
-          val ufs = unitPath.getFileSystem(conf)
           val files: Iterator[String] =
-            if (ufs.getFileStatus(unitPath).isDirectory) {
-              val it = ufs.listFiles(unitPath, true)
-              Iterator.continually(())
-                .takeWhile(_ => it.hasNext)
-                .map(_ => it.next().getPath)
+            if (isDir)
+              DatasetCatalog.walk(unitPath.getFileSystem(conf), unitPath)
+                .map(_._1.getPath)
                 .filter(p => isDataFile(p.getName))
                 .map(_.toString)
-            } else Iterator.single(unit)
+            else Iterator.single(unit)
           files.flatMap { p =>
             val part = p match {
               case partRe(v) => v

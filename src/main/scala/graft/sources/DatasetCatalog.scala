@@ -33,70 +33,41 @@ final case class DatasetRef(
   *
   * The Spark-native analog of the reference's paginated
   * `list_objects_v2` loop (`find_all_s3_file_names`,
-  * download_file.py:167-216): `FileSystem.listStatusIterator` streams
-  * pages of file statuses (on S3A each page is one LIST call), so a
-  * prefix with millions of objects never materializes fully on the
-  * driver — selection is applied lazily per page. This also does not
-  * reproduce the reference's page-2 bug (download_file.py:210, where the
-  * list is clobbered by `append`'s None return on pagination).
+  * download_file.py:167-216). Every listing is one walk,
+  * [[DatasetCatalog.walk]], over `FileSystem.listStatusIterator`: each
+  * directory streams its statuses page by page (on S3A each page is one
+  * LIST call), so a prefix with millions of objects never materializes
+  * fully on the driver — selection is applied lazily per page. [[list]]
+  * is the walk at depth 1 and [[listRecursive]] the unbounded walk. This
+  * also does not reproduce the reference's page-2 bug
+  * (download_file.py:210, where the list is clobbered by `append`'s None
+  * return on pagination).
   *
   * Regex selection uses find-anywhere (`re.search`) semantics to match
   * the reference's `find_all_file_matches` (download_file.py:219-228).
   * Auth failures from the underlying filesystem surface as the typed
-  * exit-202 [[InvalidCredentialsException]].
+  * exit-202 [[InvalidCredentialsException]]; a missing directory as the
+  * exit-201 [[DatasetNotFoundException]].
   */
 final class DatasetCatalog(spark: SparkSession) {
 
-  private def fsFor(p: Path): FileSystem =
-    p.getFileSystem(spark.sessionState.newHadoopConf())
-
-  private def toRef(st: FileStatus, name: String): DatasetRef =
-    DatasetRef(
-      path = st.getPath.toString,
-      name = name,
-      sizeBytes = st.getLen,
-      isDirectory = st.isDirectory)
-
-  /** Stream the entries under `dir` (non-recursive), page by page. */
-  def list(dir: String): Iterator[DatasetRef] = {
+  private def entries(dir: String, maxDepth: Int): Iterator[DatasetRef] = {
     val p = new Path(dir)
-    val fs = fsFor(p)
-    translatingAuth(s"list $dir") {
-      if (!fs.exists(p)) throw DatasetNotFoundException(dir, "<listing>")
-    }
-    val it = translatingAuth(s"list $dir")(fs.listStatusIterator(p))
-    new Iterator[DatasetRef] {
-      def hasNext: Boolean = translatingAuth(s"list $dir")(it.hasNext)
-      def next(): DatasetRef = {
-        val st = translatingAuth(s"list $dir")(it.next())
-        toRef(st, st.getPath.getName)
-      }
+    DatasetCatalog.walk(p.getFileSystem(spark.sessionState.newHadoopConf()),
+      p, maxDepth).map { case (st, rel) =>
+      DatasetRef(st.getPath.toString, rel, st.getLen, st.isDirectory)
     }
   }
+
+  /** Stream the entries (files and directories) directly under `dir`. */
+  def list(dir: String): Iterator[DatasetRef] = entries(dir, maxDepth = 1)
 
   /** Stream ALL files under `dir` recursively — the analog of the
-    * reference upload's recursive two-star `{folder}` walk. Entry names are
-    * dir-relative paths (`sub/inner/a.csv`); on S3A the recursive
-    * variant is a single flat-prefix LIST stream, not a directory
-    * walk, so deep trees with millions of objects page scalably.
+    * reference upload's recursive two-star `{folder}` walk. Entry names
+    * are dir-relative paths (`sub/inner/a.csv`).
     */
-  def listRecursive(dir: String): Iterator[DatasetRef] = {
-    val p = new Path(dir)
-    val fs = fsFor(p)
-    translatingAuth(s"list $dir") {
-      if (!fs.exists(p)) throw DatasetNotFoundException(dir, "<listing>")
-    }
-    val rootUri = fs.makeQualified(p).toUri
-    val it = translatingAuth(s"list $dir")(fs.listFiles(p, true))
-    new Iterator[DatasetRef] {
-      def hasNext: Boolean = translatingAuth(s"list $dir")(it.hasNext)
-      def next(): DatasetRef = {
-        val st = translatingAuth(s"list $dir")(it.next())
-        val rel = rootUri.relativize(st.getPath.toUri).getPath
-        toRef(st, rel)
-      }
-    }
-  }
+  def listRecursive(dir: String): Iterator[DatasetRef] =
+    entries(dir, maxDepth = Int.MaxValue)
 
   /** Compile a user pattern, mapping syntax errors to the typed
     * invalid-regex failure (exit 203). Glob patterns are translated
@@ -128,12 +99,8 @@ final class DatasetCatalog(spark: SparkSession) {
     * exit paths. Results are name-sorted so multi-match enumeration is
     * deterministic.
     */
-  def select(dir: String, pattern: String, mode: MatchMode): Seq[DatasetRef] = {
-    val m = matcher(pattern, mode)
-    val matched = list(dir).filter(r => m(r.name)).toSeq
-    if (matched.isEmpty) throw DatasetNotFoundException(dir, pattern)
-    matched.sortBy(_.name)
-  }
+  def select(dir: String, pattern: String, mode: MatchMode): Seq[DatasetRef] =
+    selectIn(dir, pattern, mode, recursive = false)
 
   /** Select recursively: patterns match the dir-RELATIVE path of every
     * file in the tree, so `**&#47;*.csv`-style globs (or regexes over
@@ -143,10 +110,63 @@ final class DatasetCatalog(spark: SparkSession) {
   def selectRecursive(
       dir: String,
       pattern: String,
-      mode: MatchMode): Seq[DatasetRef] = {
+      mode: MatchMode): Seq[DatasetRef] =
+    selectIn(dir, pattern, mode, recursive = true)
+
+  private[sources] def selectIn(
+      dir: String,
+      pattern: String,
+      mode: MatchMode,
+      recursive: Boolean): Seq[DatasetRef] = {
     val m = matcher(pattern, mode)
-    val matched = listRecursive(dir).filter(r => m(r.name)).toSeq
+    val listed = if (recursive) listRecursive(dir) else list(dir)
+    val matched = listed.filter(r => m(r.name)).toSeq
     if (matched.isEmpty) throw DatasetNotFoundException(dir, pattern)
     matched.sortBy(_.name)
+  }
+}
+
+object DatasetCatalog {
+
+  /** The one directory walk behind every recursive Hadoop listing: a
+    * lazy depth-first descent over `FileSystem.listStatusIterator`,
+    * yielding each entry with its `root`-relative path
+    * (`sub/inner/a.csv`). Directories shallower than `maxDepth` are
+    * descended and not yielded; entries at `maxDepth` are yielded
+    * whatever their kind, so `maxDepth = 1` is the flat listing and the
+    * unbounded walk yields files only.
+    *
+    * Each directory is one `listStatusIterator` stream, so on S3A the
+    * walk sends one paged LIST per directory rather than one flat-prefix
+    * stream (that request count is not measured against a real
+    * endpoint). `listFiles` is deliberately not used: on `file:` its
+    * `LocatedFileStatus` reads permissions, which forks `ls` once per
+    * file when native Hadoop is not loaded.
+    *
+    * A missing `root` raises [[DatasetNotFoundException]] (exit 201);
+    * auth failures anywhere in the walk raise
+    * [[InvalidCredentialsException]] (exit 202).
+    */
+  private[graft] def walk(
+      fs: FileSystem,
+      root: Path,
+      maxDepth: Int = Int.MaxValue): Iterator[(FileStatus, String)] = {
+    val context = s"list $root"
+    def auth[T](body: => T): T = translatingAuth(context)(body)
+    if (!auth(fs.exists(root)))
+      throw DatasetNotFoundException(root.toString, "<listing>")
+    def level(dir: Path, prefix: String, depth: Int)
+        : Iterator[(FileStatus, String)] = {
+      val it = auth(fs.listStatusIterator(dir))
+      Iterator.continually(()).takeWhile(_ => auth(it.hasNext))
+        .map(_ => auth(it.next()))
+        .flatMap { st =>
+          val rel = prefix + st.getPath.getName
+          if (st.isDirectory && depth < maxDepth)
+            level(st.getPath, rel + "/", depth + 1)
+          else Iterator.single(st -> rel)
+        }
+    }
+    level(root, "", 1)
   }
 }

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -60,9 +60,7 @@ final class DatasetIO(spark: SparkSession) {
       schema: Option[StructType] = None,
       options: Map[String, String] = Map.empty,
       recursive: Boolean = false): DataFrame = {
-    val matches =
-      if (recursive) catalog.selectRecursive(dir, pattern, mode)
-      else catalog.select(dir, pattern, mode)
+    val matches = catalog.selectIn(dir, pattern, mode, recursive)
     val fmt = format.getOrElse(inferFormat(matches.head.path))
     var reader = spark.read.format(fmt).options(defaultOptions(fmt) ++ options)
     schema.foreach(s => reader = reader.schema(s))
@@ -133,6 +131,39 @@ final class DatasetIO(spark: SparkSession) {
     }
   }
 
+  /** Compaction PLAN — price a small-file rewrite BEFORE paying for it
+    * (the S3 pipeline's chronic cost center; [[compact]] executes, this
+    * only reads metadata): every data file under `path` is assigned to
+    * an output bin by the [[graft.operators.Sampling.packingMap]]
+    * first-fit rule at file grain — deterministic hash order, prefix
+    * sum of sizes, bin = start offset DIV target; a file whose start
+    * lands in a bin joins that bin whole, so bins may overrun the
+    * target by less than one file. Only file NAMES and SIZES touch the
+    * driver (the same metadata-only listing the reference pages); the
+    * plan math itself is the distributed prefix sum. Zero-byte files
+    * carry no bytes and are excluded (they compact away implicitly).
+    *
+    * Output: (bin, n_files, bytes, first_file), ordered by bin.
+    */
+  def compactionPlan(
+      path: String,
+      targetBytesPerFile: Long = 128L * 1024 * 1024): DataFrame = {
+    require(targetBytesPerFile > 0, "target must be positive")
+    val p = new Path(path)
+    val files = dataFiles(fsFor(p), p).map { case (st, rel) => (rel, st.getLen) }
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    graft.operators.Sampling
+      .packingMap(files.toDF("file_name", "bytes"),
+        "file_name", "bytes", targetBytesPerFile)
+      .groupBy(col("first_seq").as("bin"))
+      .agg(
+        count(lit(1)).as("n_files"),
+        sum(col("n_tokens")).as("bytes"),
+        min(col("file_name")).as("first_file"))
+      .orderBy("bin")
+  }
+
   /** Compact a dataset's small files: rewrite with `repartition` sized
     * by the data's actual bytes / `targetBytesPerFile` — the
     * maintenance op every object-store table needs once streaming or
@@ -159,53 +190,6 @@ final class DatasetIO(spark: SparkSession) {
     * the caller passes `allowNonAtomicSwap = true` and accepts the
     * crash window.
     */
-  /** Compaction PLAN — price a small-file rewrite BEFORE paying for it
-    * (the S3 pipeline's chronic cost center; [[compact]] executes, this
-    * only reads metadata): every data file under `path` is assigned to
-    * an output bin by the [[graft.operators.Sampling.packingMap]]
-    * first-fit rule at file grain — deterministic hash order, prefix
-    * sum of sizes, bin = start offset DIV target; a file whose start
-    * lands in a bin joins that bin whole, so bins may overrun the
-    * target by less than one file. Only file NAMES and SIZES touch the
-    * driver (the same metadata-only listing the reference pages); the
-    * plan math itself is the distributed prefix sum. Zero-byte files
-    * carry no bytes and are excluded (they compact away implicitly).
-    *
-    * Output: (bin, n_files, bytes, first_file), ordered by bin.
-    */
-  def compactionPlan(
-      path: String,
-      targetBytesPerFile: Long = 128L * 1024 * 1024): DataFrame = {
-    require(targetBytesPerFile > 0, "target must be positive")
-    val p0 = new Path(path)
-    val fs = fsFor(p0)
-    val p = fs.makeQualified(p0)
-    val rootUri = p.toUri
-    val files = graft.sources.GraftException
-      .translatingAuth(s"compactionPlan $path") {
-        val it = fs.listFiles(p, /*recursive=*/ true)
-        var out = List.empty[(String, Long)]
-        while (it.hasNext) {
-          val f = it.next()
-          val nm = f.getPath.getName
-          if (!nm.startsWith("_") && !nm.startsWith("."))
-            out ::= (rootUri.relativize(f.getPath.toUri).getPath, f.getLen)
-        }
-        out
-      }
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    graft.operators.Sampling
-      .packingMap(files.toDF("file_name", "bytes"),
-        "file_name", "bytes", targetBytesPerFile)
-      .groupBy(col("first_seq").as("bin"))
-      .agg(
-        count(lit(1)).as("n_files"),
-        sum(col("n_tokens")).as("bytes"),
-        min(col("file_name")).as("first_file"))
-      .orderBy("bin")
-  }
-
   def compact(
       path: String,
       targetBytesPerFile: Long = 128L * 1024 * 1024,
@@ -220,37 +204,11 @@ final class DatasetIO(spark: SparkSession) {
           "pointer-swap commits (Iceberg/Delta/Hudi) for object-store " +
           "compaction, or pass allowNonAtomicSwap=true to accept the risk.")
     val fs = fsFor(p0)
-    val p = fs.makeQualified(p0) // listed statuses come back qualified
-    def dataFiles() = graft.sources.GraftException.translatingAuth(s"compact $path") {
-      val it = fs.listFiles(p, /*recursive=*/ true)
-      var files = List.empty[org.apache.hadoop.fs.LocatedFileStatus]
-      while (it.hasNext) {
-        val f = it.next()
-        if (!f.getPath.getName.startsWith("_")) files ::= f
-      }
-      files
-    }
-    val before = dataFiles()
-    val totalBytes = before.map(_.getLen).sum
-    val nFiles = math.max(1, math.ceil(
-      totalBytes.toDouble / targetBytesPerFile).toInt)
-    // partition columns, from the `col=value` dir components between the
-    // dataset root and any data file (hive layout is uniform)
-    val partCols: Seq[String] = before.headOption.toSeq.flatMap { f =>
-      Iterator.iterate(f.getPath.getParent)(_.getParent)
-        .takeWhile(d => d != null && d != p)
-        .map(_.getName).toSeq.reverse
-        .filter(_.contains('='))
-        .map(_.takeWhile(_ != '='))
-    }
-    val df = read(path, format)
-    val rewritten =
-      if (partCols.isEmpty) df.repartition(nFiles)
-      else df.repartition(nFiles,
-        partCols.map(org.apache.spark.sql.functions.col): _*)
+    val p = fs.makeQualified(p0)
+    val before = dataFiles(fs, p)
     val tmp = new Path(p.getParent, s".${p.getName}_compact_tmp")
     val old = new Path(p.getParent, s".${p.getName}_compact_old")
-    write(rewritten, tmp.toString, format, partitionBy = partCols)
+    rewrite(p, before, tmp, targetBytesPerFile, format)
     // Hadoop rename reports most failures by RETURNING FALSE, not
     // throwing — check every step so a failed swap errors instead of
     // silently nesting tmp inside the dataset.
@@ -268,7 +226,42 @@ final class DatasetIO(spark: SparkSession) {
       }
       fs.delete(old, true)
     }
-    (before.size, dataFiles().size)
+    (before.size, dataFiles(fs, p).size)
+  }
+
+  /** Data files under `dir` with their dir-relative paths, by Spark's
+    * reader rule: no segment of the relative path may start with `.`,
+    * or with `_` unless it is a `_col=value` partition dir. So `_SUCCESS`,
+    * `.crc` sidecars, `_temporary/` and a managed root's `_gen-*` and
+    * `_manifests` are not data. Shared by every compaction listing.
+    */
+  private def dataFiles(fs: FileSystem, dir: Path): Seq[(FileStatus, String)] =
+    DatasetCatalog.walk(fs, dir).filter { case (_, rel) =>
+      rel.split('/').forall(seg => !seg.startsWith(".") &&
+        !(seg.startsWith("_") && !seg.contains('=')))
+    }.toList
+
+  /** The rewrite step of [[compact]] and [[compactCommitted]]: read
+    * `src` and write it to `dest` as bytes / `targetBytesPerFile` files,
+    * reapplying a `col=value` layout (hive layout is uniform, so any
+    * data file's dirs name the partition columns).
+    */
+  private def rewrite(
+      src: Path,
+      files: Seq[(FileStatus, String)],
+      dest: Path,
+      targetBytesPerFile: Long,
+      format: Option[String]): Unit = {
+    val nFiles = math.max(1, math.ceil(
+      files.map(_._1.getLen).sum.toDouble / targetBytesPerFile).toInt)
+    val partCols = files.headOption.toSeq.flatMap(_._2.split('/').init
+      .filter(_.contains('=')).map(_.takeWhile(_ != '=')))
+    val df = read(src.toString, format)
+    val rewritten =
+      if (partCols.isEmpty) df.repartition(nFiles)
+      else df.repartition(nFiles,
+        partCols.map(org.apache.spark.sql.functions.col): _*)
+    write(rewritten, dest.toString, format, partitionBy = partCols)
   }
 
   // ---- manifest-committed compaction: the object-store-safe path ----
@@ -289,15 +282,20 @@ final class DatasetIO(spark: SparkSession) {
     * unmanaged dataset (no `_manifests/` yet — generation 0 is the
     * root's own loose files).
     */
-  private[sources] def currentManifest(root: Path): Option[(Long, String)] = {
-    val fs = fsFor(root)
+  private[sources] def currentManifest(root: Path): Option[(Long, String)] =
+    manifests(fsFor(root), root).lastOption
+
+  /** Every parseable manifest under `root/_manifests` as (gen, dataDir),
+    * oldest first; empty for an unmanaged dataset.
+    */
+  private def manifests(fs: FileSystem, root: Path): Seq[(Long, String)] = {
     val mdir = new Path(root, "_manifests")
-    if (!fs.exists(mdir)) return None
-    val parsed = fs.listStatus(mdir).toSeq
+    if (!fs.exists(mdir)) Nil
+    else fs.listStatus(mdir).toSeq
       .map(_.getPath)
       .filter(_.getName.matches("manifest-\\d+\\.json"))
       .flatMap(mp => parseManifest(fs, mp))
-    if (parsed.isEmpty) None else Some(parsed.maxBy(_._1))
+      .sortBy(_._1)
   }
 
   /** One manifest file → (gen, dataDir), or None when absent, torn
@@ -318,7 +316,6 @@ final class DatasetIO(spark: SparkSession) {
       }
     } catch {
       case _: java.io.IOException => None
-      case _: java.io.FileNotFoundException => None
     }
 
   private val ManifestRe =
@@ -349,14 +346,9 @@ final class DatasetIO(spark: SparkSession) {
   def listGenerations(path: String): Seq[(Long, String, Boolean)] = {
     val fs = fsFor(new Path(path))
     val root = fs.makeQualified(new Path(path))
-    val mdir = new Path(root, "_manifests")
-    if (!fs.exists(mdir)) return Nil
-    fs.listStatus(mdir).toSeq
-      .map(_.getPath)
-      .filter(_.getName.matches("manifest-\\d+\\.json"))
-      .flatMap(mp => parseManifest(fs, mp))
-      .sortBy(_._1)
-      .map { case (g, d) => (g, d, fs.exists(new Path(root, d))) }
+    manifests(fs, root).map { case (g, d) =>
+      (g, d, fs.exists(new Path(root, d)))
+    }
   }
 
   /** Time travel: read a SPECIFIC committed generation. Errors loudly
@@ -467,36 +459,9 @@ final class DatasetIO(spark: SparkSession) {
         }
       }
     }
-    def dataFilesUnder(d: Path): Seq[org.apache.hadoop.fs.LocatedFileStatus] =
-      graft.sources.GraftException.translatingAuth(s"compactCommitted $path") {
-        val it = fs.listFiles(d, /*recursive=*/ true)
-        var files = List.empty[org.apache.hadoop.fs.LocatedFileStatus]
-        while (it.hasNext) {
-          val f = it.next()
-          val rel = root.toUri.relativize(f.getPath.toUri).getPath
-          // the root-grain listing must not see managed internals
-          val managed = rel.startsWith("_gen-") || rel.startsWith("_manifests")
-          if (!f.getPath.getName.startsWith("_") &&
-            (d != root || !managed)) files ::= f
-        }
-        files
-      }
-    val before = dataFilesUnder(curDataPath)
-    val totalBytes = before.map(_.getLen).sum
-    val nFiles = math.max(1, math.ceil(
-      totalBytes.toDouble / targetBytesPerFile).toInt)
-    val partCols: Seq[String] = before.headOption.toSeq.flatMap { f =>
-      Iterator.iterate(f.getPath.getParent)(_.getParent)
-        .takeWhile(d => d != null && d != curDataPath)
-        .map(_.getName).toSeq.reverse
-        .filter(_.contains('='))
-        .map(_.takeWhile(_ != '='))
-    }
-    val df = read(curDataPath.toString, format)
-    val rewritten =
-      if (partCols.isEmpty) df.repartition(nFiles)
-      else df.repartition(nFiles,
-        partCols.map(org.apache.spark.sql.functions.col): _*)
+    // an unmanaged root's `_gen-*`/`_manifests` are `_`-prefixed dirs,
+    // so the data-file rule already keeps managed internals out
+    val before = dataFiles(fs, curDataPath)
     val newGen = curGen + 1
     // phase 2: every ATTEMPT stages into its own nonce-suffixed dir —
     // on object stores create(overwrite=false) is check-then-act, so
@@ -506,8 +471,8 @@ final class DatasetIO(spark: SparkSession) {
     // step 1b of the next compaction.
     val newDir =
       s"_gen-$newGen-${java.util.UUID.randomUUID().toString.take(8)}"
-    write(rewritten, new Path(root, newDir).toString, format,
-      partitionBy = partCols)
+    rewrite(curDataPath, before, new Path(root, newDir),
+      targetBytesPerFile, format)
     if (compactFailpoint == 1)
       throw new java.io.IOException("failpoint 1: crash before commit")
     // phase 3: the commit — one create-exclusive small object
@@ -550,9 +515,9 @@ final class DatasetIO(spark: SparkSession) {
     if (!retainPrevious) cur match {
       case Some((_, d)) => fs.delete(new Path(root, d), true): Unit
       case None => // migrate-from-unmanaged: remove the loose root files
-        before.foreach(f => fs.delete(f.getPath, false))
+        before.foreach { case (st, _) => fs.delete(st.getPath, false) }
     }
-    (before.size, dataFilesUnder(new Path(root, newDir)).size)
+    (before.size, dataFiles(fs, new Path(root, newDir)).size)
   }
 
   /** Move datasets matching `pattern` from `srcDir` to `dstDir`,
@@ -605,9 +570,7 @@ final class DatasetIO(spark: SparkSession) {
       destName: Option[String],
       recursive: Boolean,
       deleteSource: Boolean): Seq[(String, String)] = {
-    val matches =
-      if (recursive) catalog.selectRecursive(srcDir, pattern, mode)
-      else catalog.select(srcDir, pattern, mode)
+    val matches = catalog.selectIn(srcDir, pattern, mode, recursive)
     val multi = matches.size > 1
     val dstRoot = new Path(dstDir)
     val dstFs = fsFor(dstRoot)
@@ -642,10 +605,7 @@ final class DatasetIO(spark: SparkSession) {
       pattern: String,
       mode: MatchMode,
       recursive: Boolean = false): Seq[String] = {
-    val matches =
-      if (recursive) catalog.selectRecursive(dir, pattern, mode)
-      else catalog.select(dir, pattern, mode)
-    matches.map { ref =>
+    catalog.selectIn(dir, pattern, mode, recursive).map { ref =>
       val p = new Path(ref.path)
       graft.sources.GraftException.translatingAuth(s"remove ${ref.path}") {
         fsFor(p).delete(p, /*recursive=*/ true)

@@ -1729,37 +1729,30 @@ object DeltaWrite {
     val w = df.write.mode("overwrite")
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(stage.toString)
-    // walk the stage tree: every part file's path relative to stage IS
-    // its final path relative to the table root (Spark already wrote
-    // the <col>=<val>/ layout with partition columns dropped from the
-    // data — exactly Delta's physical shape)
-    val moved =
-      Seq.newBuilder[(String, Map[String, Option[String]], Long, String)]
-    def walk(dir: Path, rel: Seq[String]): Unit =
-      fs.listStatus(dir).foreach { st =>
-        val name = st.getPath.getName
-        if (st.isDirectory) walk(st.getPath, rel :+ name)
-        else if (name.startsWith("part-") && name.endsWith(".parquet")) {
-          val relPath = (rel :+ name).mkString("/")
-          val dest = new Path(root, relPath)
-          fs.mkdirs(dest.getParent)
-          if (!fs.rename(st.getPath, dest))
-            fail(root.toString, s"rename to $dest failed")
-          val pvs = rel.filter(_.contains('=')).map { seg =>
-            val k = seg.takeWhile(_ != '=')
-            val v = unescapePathName(seg.drop(k.length + 1))
-            k -> (if (v == "__HIVE_DEFAULT_PARTITION__") None else Some(v))
-          }.toMap
-          // stats key = the scan's `_metadata.file_path` form (URI-
-          // encoded, qualified) — part file NAMES repeat across
-          // partition dirs of one job, so names cannot key anything
-          moved += ((relPath, pvs, st.getLen,
-            fs.makeQualified(dest).toUri.toString))
-        }
-      }
-    walk(stage, Seq.empty)
+    // every part file's path relative to stage IS its final path
+    // relative to the table root (Spark already wrote the <col>=<val>/
+    // layout with partition columns dropped from the data — exactly
+    // Delta's physical shape)
+    val staged = DatasetCatalog.walk(fs, stage).filter { case (st, _) =>
+      val name = st.getPath.getName
+      name.startsWith("part-") && name.endsWith(".parquet")
+    }.toList
+    val files = staged.map { case (st, relPath) =>
+      val dest = new Path(root, relPath)
+      fs.mkdirs(dest.getParent)
+      if (!fs.rename(st.getPath, dest))
+        fail(root.toString, s"rename to $dest failed")
+      val pvs = relPath.split('/').init.filter(_.contains('=')).map { seg =>
+        val k = seg.takeWhile(_ != '=')
+        val v = unescapePathName(seg.drop(k.length + 1))
+        k -> (if (v == "__HIVE_DEFAULT_PARTITION__") None else Some(v))
+      }.toMap
+      // stats key = the scan's `_metadata.file_path` form (URI-
+      // encoded, qualified) — part file NAMES repeat across
+      // partition dirs of one job, so names cannot key anything
+      (relPath, pvs, st.getLen, fs.makeQualified(dest).toUri.toString)
+    }
     fs.delete(stage, true): Unit
-    val files = moved.result()
     if (files.isEmpty) return Seq.empty
     val statsByPath: Map[String, String] =
       if (!collectStats) Map.empty

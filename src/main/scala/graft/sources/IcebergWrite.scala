@@ -511,40 +511,7 @@ object IcebergWrite {
           .parquet(stage.toString)
       }
     }
-    val moved =
-      Seq.newBuilder[(String, Path, Map[String, Option[String]])]
-    var i = 0
-    def walk(dir: Path, pvs: Map[String, Option[String]]): Unit =
-      fs.listStatus(dir).toSeq.sortBy(_.getPath.getName).foreach { st =>
-        val name = st.getPath.getName
-        if (st.isDirectory) {
-          if (name.startsWith("__gp_") && name.contains('=')) {
-            val c = name.drop(5).takeWhile(_ != '=')
-            val raw = DeltaWrite.unescapePathName(
-              name.drop(5 + c.length + 1))
-            val v =
-              if (raw == "__HIVE_DEFAULT_PARTITION__") None
-              else Some(raw)
-            walk(st.getPath, pvs + (c -> v))
-          } else walk(st.getPath, pvs)
-        } else if (name.startsWith("part-") && name.endsWith(".parquet")) {
-          val dirPart = specCols.map { c =>
-            val v = pvs.getOrElse(c, None)
-            s"$c=${v.getOrElse("__HIVE_DEFAULT_PARTITION__")}"
-          }
-          val rel = (Seq("data") ++ dirPart ++
-            Seq(s"delete-$nonce-$i.parquet")).mkString("/")
-          val dest = new Path(root, rel)
-          fs.mkdirs(dest.getParent)
-          if (!fs.rename(st.getPath, dest))
-            fail(root.toString, s"rename to $dest failed")
-          moved += ((rel, dest, pvs))
-          i += 1
-        }
-      }
-    walk(stage, Map.empty)
-    fs.delete(stage, true): Unit
-    val files = moved.result()
+    val files = moveStaged(fs, root, stage, specCols, s"delete-$nonce-")
     val counts =
       if (files.isEmpty) Map.empty[String, Long]
       else spark.read.parquet(files.map(_._2.toString): _*)
@@ -653,23 +620,7 @@ object IcebergWrite {
     FieldIds.withWriteEnabled(spark) {
       delDf.write.mode("overwrite").parquet(stage.toString)
     }
-    val moved = Seq.newBuilder[(String, Path)]
-    var i = 0
-    fs.listStatus(stage).toSeq
-      .filter(st => st.isFile && st.getPath.getName.startsWith("part-") &&
-        st.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.getName)
-      .foreach { st =>
-        val rel = s"data/eqdelete-$nonce-$i.parquet"
-        val dest = new Path(root, rel)
-        fs.mkdirs(dest.getParent)
-        if (!fs.rename(st.getPath, dest))
-          fail(root.toString, s"rename to $dest failed")
-        moved += ((rel, dest))
-        i += 1
-      }
-    fs.delete(stage, true): Unit
-    val delFiles = moved.result()
+    val delFiles = moveStaged(fs, root, stage, Nil, s"eqdelete-$nonce-")
     val delCounts =
       if (delFiles.isEmpty) Map.empty[String, Long]
       else spark.read.parquet(delFiles.map(_._2.toString): _*)
@@ -678,7 +629,7 @@ object IcebergWrite {
         .collect()
         .map(r => DeltaRead.normalizeStr(r.getString(0)) -> r.getLong(1))
         .toMap
-    val delEntries = delFiles.flatMap { case (rel, dest) =>
+    val delEntries = delFiles.flatMap { case (rel, dest, _) =>
       val rc = delCounts.getOrElse(DeltaRead.normalizeStr(
         fs.makeQualified(dest).toUri.toString), 0L)
       if (rc == 0L) { fs.delete(dest, false); None }
@@ -1023,42 +974,7 @@ object IcebergWrite {
           .parquet(stage.toString)
       }
     }
-    // walk the staged tree: __gp_<col>=<val> dir segments carry each
-    // file's partition tuple; final layout uses the real column names
-    val moved =
-      Seq.newBuilder[(String, Path, Map[String, Option[String]])]
-    var i = 0
-    def walk(dir: Path, pvs: Map[String, Option[String]]): Unit =
-      fs.listStatus(dir).toSeq.sortBy(_.getPath.getName).foreach { st =>
-        val name = st.getPath.getName
-        if (st.isDirectory) {
-          if (name.startsWith("__gp_") && name.contains('=')) {
-            val c = name.drop(5).takeWhile(_ != '=')
-            val raw = DeltaWrite.unescapePathName(
-              name.drop(5 + c.length + 1))
-            val v =
-              if (raw == "__HIVE_DEFAULT_PARTITION__") None
-              else Some(raw)
-            walk(st.getPath, pvs + (c -> v))
-          } else walk(st.getPath, pvs)
-        } else if (name.startsWith("part-") && name.endsWith(".parquet")) {
-          val dirPart = partitionBy.map { c =>
-            val v = pvs.getOrElse(c, None)
-            s"$c=${v.getOrElse("__HIVE_DEFAULT_PARTITION__")}"
-          }
-          val rel = (Seq("data") ++ dirPart ++
-            Seq(s"$nonce-$i.parquet")).mkString("/")
-          val dest = new Path(root, rel)
-          fs.mkdirs(dest.getParent)
-          if (!fs.rename(st.getPath, dest))
-            fail(root.toString, s"rename to $dest failed")
-          moved += ((rel, dest, pvs))
-          i += 1
-        }
-      }
-    walk(stage, Map.empty)
-    fs.delete(stage, true): Unit
-    val files = moved.result()
+    val files = moveStaged(fs, root, stage, partitionBy, s"$nonce-")
     if (files.isEmpty) return Seq.empty
     val counts = spark.read.schema(tagged)
       .parquet(files.map(_._2.toString): _*)
@@ -1076,6 +992,47 @@ object IcebergWrite {
       if (rc == 0L) { fs.delete(dest, false); None }
       else Some((rel, rc, fs.getFileStatus(dest).getLen, pvs))
     }
+  }
+
+  /** Move a stage tree's part files to
+    * `data/[<col>=<val>/...]<prefix><i>.parquet` under `root` and drop
+    * the stage; returns (relPath, dest, partitionValues) per file.
+    * `__gp_<col>=<val>` dir segments carry each file's partition tuple;
+    * the final layout names `cols`. Files are numbered in relative-path
+    * order, compared segment by segment (a sorted depth-first walk).
+    */
+  private def moveStaged(
+      fs: org.apache.hadoop.fs.FileSystem,
+      root: Path,
+      stage: Path,
+      cols: Seq[String],
+      prefix: String): Seq[(String, Path, Map[String, Option[String]])] = {
+    import scala.math.Ordering.Implicits.seqOrdering
+    val staged = DatasetCatalog.walk(fs, stage).filter { case (st, _) =>
+      val name = st.getPath.getName
+      name.startsWith("part-") && name.endsWith(".parquet")
+    }.toSeq.sortBy(_._2.split('/').toSeq)
+    val moved = staged.zipWithIndex.map { case ((st, stagedRel), i) =>
+      val pvs = stagedRel.split('/').init.toSeq
+        .filter(seg => seg.startsWith("__gp_") && seg.contains('='))
+        .map { seg =>
+          val c = seg.drop(5).takeWhile(_ != '=')
+          val raw = DeltaWrite.unescapePathName(seg.drop(5 + c.length + 1))
+          c -> (if (raw == "__HIVE_DEFAULT_PARTITION__") None else Some(raw))
+        }.toMap
+      val dirPart = cols.map { c =>
+        val v = pvs.getOrElse(c, None)
+        s"$c=${v.getOrElse("__HIVE_DEFAULT_PARTITION__")}"
+      }
+      val rel = (Seq("data") ++ dirPart :+ s"$prefix$i.parquet").mkString("/")
+      val dest = new Path(root, rel)
+      fs.mkdirs(dest.getParent)
+      if (!fs.rename(st.getPath, dest))
+        fail(root.toString, s"rename to $dest failed")
+      (rel, dest, pvs)
+    }
+    fs.delete(stage, true): Unit
+    moved
   }
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()

@@ -94,12 +94,4 @@ object PathUtil {
     }
     sb.append("$").toString
   }
-
-  /** Full destination path: folder + resolved destination name. */
-  def destinationPath(
-      destFolder: String,
-      sourcePath: String,
-      explicitDest: Option[String],
-      fileNumber: Option[Int]): String =
-    combine(destFolder, destinationName(sourcePath, explicitDest, fileNumber))
 }

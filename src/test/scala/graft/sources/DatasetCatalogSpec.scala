@@ -2,6 +2,10 @@ package graft.sources
 
 import java.nio.file.{Files, Path}
 
+import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
+
 import graft.SparkTestBase
 
 class DatasetCatalogSpec extends SparkTestBase {
@@ -101,5 +105,89 @@ class DatasetCatalogSpec extends SparkTestBase {
     val ref = catalog.select(dir.toString, "x.bin", MatchMode.Exact).head
     assert(ref.sizeBytes == "content of x.bin".length)
     assert(!ref.isDirectory)
+  }
+
+  // ---- the one walk vs Hadoop's own listings, on generated trees ----
+
+  private sealed trait Node { def name: String }
+  private final case class FileNode(name: String, bytes: Int) extends Node
+  private final case class DirNode(name: String, children: List[Node])
+      extends Node
+
+  /** Plain, `_`- and `.`-prefixed and `k=v` names, with spaces and `%`. */
+  private val nameGen: Gen[String] = for {
+    head <- Gen.alphaNumChar
+    tail <- Gen.choose(0, 5).flatMap(Gen.listOfN(_, Gen.frequency(
+      6 -> Gen.alphaNumChar, 1 -> Gen.const(' '), 1 -> Gen.const('%'))))
+    kind <- Gen.frequency(4 -> "", 1 -> "_", 1 -> ".", 1 -> "k=")
+  } yield kind + head + tail.mkString
+
+  private def treeGen(depth: Int): Gen[List[Node]] =
+    Gen.choose(0, 4).flatMap(Gen.listOfN(_, nodeGen(depth)))
+      .map(_.distinctBy(_.name))
+
+  private def nodeGen(depth: Int): Gen[Node] = {
+    val file = for (n <- nameGen; b <- Gen.choose(0, 40)) yield FileNode(n, b)
+    if (depth == 0) file
+    else Gen.frequency(2 -> file, 1 -> Gen.lzy(
+      for (n <- nameGen; c <- treeGen(depth - 1)) yield DirNode(n, c)))
+  }
+
+  private val trees: Seq[List[Node]] =
+    (0 until 25).flatMap(i => treeGen(3)(Gen.Parameters.default, Seed(i)))
+
+  /** Write through Hadoop's `file:` FS, so every file gets a `.crc`. */
+  private def plant(dir: String, nodes: List[Node]): Unit = {
+    val local = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    def rec(d: HPath, ns: List[Node]): Unit = {
+      local.mkdirs(d)
+      ns.foreach {
+        case FileNode(n, b) =>
+          val out = local.create(new HPath(d, n))
+          out.write(Array.fill(b)('x'.toByte)); out.close()
+        case DirNode(n, c) => rec(new HPath(d, n), c)
+      }
+    }
+    rec(new HPath(dir), nodes)
+  }
+
+  /** `listRecursive` equals `fs.listFiles(root, true)` by (relative
+    * name, size); `list` equals `fs.listStatus(root)`.
+    */
+  private def assertListingsAgree(root: String): Unit = {
+    val p = new HPath(root)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val rootUri = fs.makeQualified(p).toUri
+    val it = fs.listFiles(p, true)
+    val deep = Iterator.continually(()).takeWhile(_ => it.hasNext)
+      .map(_ => it.next())
+      .map(st => (rootUri.relativize(st.getPath.toUri).getPath, st.getLen))
+      .toSeq.sorted
+    assert(catalog.listRecursive(root).map(r => (r.name, r.sizeBytes))
+      .toSeq.sorted == deep, root)
+    val flat = fs.listStatus(p).toSeq
+      .map(st => (st.getPath.getName, st.getLen, st.isDirectory)).sorted
+    assert(catalog.list(root).map(r => (r.name, r.sizeBytes, r.isDirectory))
+      .toSeq.sorted == flat, root)
+  }
+
+  test("property: on file: the walk lists what listFiles/listStatus do") {
+    val base = Files.createTempDirectory("graft_walk_")
+    trees.zipWithIndex.foreach { case (t, i) =>
+      plant(s"$base/t$i", t)
+      assertListingsAgree(s"file:$base/t$i")
+    }
+    // the sidecars really exist on disk, and the walk hides them
+    assert(Files.walk(base).anyMatch(_.getFileName.toString.endsWith(".crc")))
+  }
+
+  test("property: on mock s3a:// the walk lists what listFiles/listStatus do") {
+    MockS3aFileSystem.withBucket(spark) { bucket =>
+      val store = spark.sparkContext.hadoopConfiguration.get("fs.s3a.mock.dir")
+      trees.zipWithIndex.foreach { case (t, i) =>
+        plant(s"$store/bkt/t$i", t)
+        assertListingsAgree(s"$bucket/t$i")
+      }
+    }
   }
 }

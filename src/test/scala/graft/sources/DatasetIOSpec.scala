@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
@@ -211,6 +211,30 @@ class DatasetIOSpec extends SparkTestBase {
     }
     assert(e2.getMessage.contains("cleaned"), e2.getMessage)
     assert(d.readCommittedAt(path, 3).count() == 25L)
+  }
+
+  test("compaction listings skip `.`- and `_`-prefixed files, like " +
+    "Spark's reader, and the migrate step leaves them in place") {
+    val tmp = Files.createTempDirectory("graft_io_").toString
+    // an unmanaged root: 4 part files plus one hidden file of each kind
+    def seeded(name: String): (String, Int) = {
+      io.write(nation.repartition(4), s"file:$tmp/$name")
+      Files.writeString(Paths.get(tmp, name, ".notes"), "not data")
+      Files.writeString(Paths.get(tmp, name, "_audit"), "not data")
+      val parts = new java.io.File(s"$tmp/$name").listFiles()
+        .count(_.getName.startsWith("part-"))
+      (s"file:$tmp/$name", parts)
+    }
+    val target = 64L * 1024 * 1024
+    val (plain, nPlain) = seeded("plain")
+    assert(io.compact(plain, target) == ((nPlain, 1)))
+    val (managed, nManaged) = seeded("managed")
+    assert(io.compactCommitted(managed, target) == ((nManaged, 1)))
+    // migrate-from-unmanaged deleted the loose data files and only them
+    val left = new java.io.File(s"$tmp/managed").listFiles().map(_.getName)
+    assert(left.contains(".notes") && left.contains("_audit"), left.toSeq)
+    assert(!left.exists(_.startsWith("part-")), left.toSeq)
+    assert(io.readCommitted(managed).count() == nation.count())
   }
 
   test("readMatched recursive glob selects across a partitioned tree") {

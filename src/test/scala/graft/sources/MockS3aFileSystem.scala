@@ -75,3 +75,21 @@ class MockS3aFileSystem extends FileSystem {
   override def getFileStatus(f: Path): FileStatus =
     translate(local.getFileStatus(toLocal(f)))
 }
+
+object MockS3aFileSystem {
+
+  /** Bind `s3a://` to a fresh mock store for `spark` and run `f` on
+    * the empty bucket `s3a://bkt`.
+    */
+  def withBucket[T](spark: org.apache.spark.sql.SparkSession)(
+      f: String => T): T = {
+    val root = java.nio.file.Files.createTempDirectory("mock_s3a_").toString
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.s3a.impl", classOf[MockS3aFileSystem].getName)
+    hc.set("fs.s3a.mock.dir", root)
+    // a fresh scheme binding per call: drop any cached s3a instance
+    FileSystem.closeAll()
+    new java.io.File(s"$root/bkt").mkdirs()
+    f("s3a://bkt")
+  }
+}

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
@@ -15,16 +13,8 @@ import graft.SparkTestBase
   */
 class S3aSchemeSpec extends SparkTestBase {
 
-  private def withMockS3a[T](f: String => T): T = {
-    val root = Files.createTempDirectory("mock_s3a_").toString
-    val hc = spark.sparkContext.hadoopConfiguration
-    hc.set("fs.s3a.impl", classOf[MockS3aFileSystem].getName)
-    hc.set("fs.s3a.mock.dir", root)
-    // a fresh scheme binding per test: drop any cached s3a instance
-    org.apache.hadoop.fs.FileSystem.closeAll()
-    new java.io.File(s"$root/bkt").mkdirs()
-    f("s3a://bkt")
-  }
+  private def withMockS3a[T](f: String => T): T =
+    MockS3aFileSystem.withBucket(spark)(f)
 
   test("catalog list/select work on s3a:// URIs with s3a-schemed results") {
     withMockS3a { base =>
@@ -41,6 +31,37 @@ class S3aSchemeSpec extends SparkTestBase {
       assert(all.forall(_.path.startsWith("s3a://bkt/")))
       val sel = catalog.select(s"$base/data", "*.csv", MatchMode.Glob)
       assert(sel.map(_.name) == Seq("a.csv", "b.csv"))
+    }
+  }
+
+  test("recursive selection, readMatched and compactionPlan on a nested " +
+    "s3a:// tree return dir-relative, s3a-schemed entries") {
+    withMockS3a { base =>
+      val io = new DatasetIO(spark)
+      val fs = new org.apache.hadoop.fs.Path(base).getFileSystem(
+        spark.sparkContext.hadoopConfiguration)
+      def put(rel: String, text: String): Unit = {
+        val out = fs.create(new org.apache.hadoop.fs.Path(s"$base/tree/$rel"))
+        out.write(text.getBytes("UTF-8")); out.close()
+      }
+      // csv shards at three depths (7 rows in all) plus a non-csv file
+      val shards = Map("n0.csv" -> 3, "r=1/n1.csv" -> 1, "r=1/deep/n2.csv" -> 3)
+      shards.foreach { case (rel, n) =>
+        put(rel, (1 to n).map(i => s"$i,x$i\n").mkString("k,v\n", "", ""))
+      }
+      put("r=1/readme.txt", "not csv")
+      val sel = io.catalog.selectRecursive(s"$base/tree", "**/*.csv",
+        MatchMode.Glob)
+      assert(sel.map(_.name) == Seq("n0.csv", "r=1/deep/n2.csv", "r=1/n1.csv"))
+      assert(sel.forall(r => r.path == s"$base/tree/${r.name}"),
+        sel.map(_.path))
+      val df = io.readMatched(s"$base/tree", "**/*.csv", MatchMode.Glob,
+        recursive = true)
+      assert(df.count() == 7L)
+      // a 1-byte target puts every data file in its own bin
+      val firsts = io.compactionPlan(s"$base/tree", targetBytesPerFile = 1L)
+        .collect().map(_.getString(3)).toSet
+      assert(firsts == shards.keySet + "r=1/readme.txt", firsts)
     }
   }
 
