@@ -52,9 +52,12 @@ import org.apache.spark.sql.types.{DataType, LongType, Metadata, MetadataBuilder
   * are COLLECTED during replay and validated against the final
   * metaData configuration (a protocol action can precede the metaData
   * that makes it satisfiable, even within one commit). The log is
-  * driver-read (it is metadata, like the reference's key listing);
-  * the DATA scan is a distributed Spark parquet read of the live
-  * files with the log schema enforced.
+  * driver-read (it is metadata, like the reference's key listing)
+  * through [[DeltaLog]], the one reader of the `_delta_log` layout:
+  * one listing per call, commits read once and parsed STRICTLY here
+  * (an unparseable line in a replayed commit refuses), checkpoint
+  * parts resolved in one place. The DATA scan is a distributed Spark
+  * parquet read of the live files with the log schema enforced.
   */
 object DeltaRead {
 
@@ -70,7 +73,20 @@ object DeltaRead {
       partitionValues: Map[String, Option[String]],
       stats: Option[String] = None,
       size: Long = 0L,
-      dv: Option[DeletionVectors.DvDescriptor] = None)
+      dv: Option[DeletionVectors.DvDescriptor] = None) {
+
+    /** The add's `stats.numRecords` (physical rows), when written. */
+    def numRecords: Option[Long] =
+      stats.flatMap { s =>
+        try Option(mapper.readTree(s).get("numRecords"))
+          .filter(_.isNumber).map(_.asLong())
+        catch { case _: Exception => None }
+      }
+
+    /** Physical rows minus the rows the file's DV masks. */
+    def liveRows: Option[Long] =
+      numRecords.map(_ - dv.map(_.cardinality).getOrElse(0L))
+  }
 
   /** The replayed state of the log at a version. `metaId` and
     * `configuration` are the metaData action's identity and table
@@ -108,55 +124,24 @@ object DeltaRead {
   private[sources] val PhysicalNameKey = "delta.columnMapping.physicalName"
   private[sources] val ColumnIdKey = "delta.columnMapping.id"
 
-  private val MaxLogFiles = 100000
-  private val MaxLogFileBytes = 64L << 20
   private val mapper = new ObjectMapper()
 
   private def fail(path: String, why: String): Nothing =
     throw new IllegalArgumentException(s"DeltaRead: $path — $why")
 
+  /** The table's log, listed once; refuses when `_delta_log` is absent. */
+  private def readerLog(spark: SparkSession, path: String): DeltaLog = {
+    val log = DeltaLog.open(spark, path)
+    if (!log.present) fail(path, "no _delta_log — not a Delta table")
+    log
+  }
+
   /** Versions present in the log, ascending: JSON commits plus
     * checkpoint-only versions (a vacuumed-head table's oldest
     * readable version is its checkpoint, reachable via `asOf`).
     */
-  def versions(spark: SparkSession, path: String): Seq[Long] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val logDir = new Path(fs.makeQualified(p), "_delta_log")
-    if (!fs.exists(logDir)) fail(path, "no _delta_log — not a Delta table")
-    val (singles, multis) = listCheckpoints(fs, logDir)
-    (listJsonVersions(fs, logDir, path) ++ singles ++ multis)
-      .distinct.sorted
-  }
-
-  private def listJsonVersions(
-      fs: org.apache.hadoop.fs.FileSystem,
-      logDir: Path,
-      path: String): Seq[Long] = {
-    val vs = fs.listStatus(logDir).toSeq
-      .map(_.getPath.getName)
-      .filter(_.matches("\\d{20}\\.json"))
-      .map(_.stripSuffix(".json").toLong)
-      .sorted
-    if (vs.size > MaxLogFiles)
-      fail(path, s"log has ${vs.size} commits (> $MaxLogFiles) — " +
-        "replay refused; the table needs checkpoint-based access")
-    vs
-  }
-
-  /** Checkpoint versions present: (single-part classic, multi-part). */
-  private def listCheckpoints(
-      fs: org.apache.hadoop.fs.FileSystem,
-      logDir: Path): (Seq[Long], Seq[Long]) = {
-    val names = fs.listStatus(logDir).toSeq.map(_.getPath.getName)
-    val singles = names
-      .filter(_.matches("\\d{20}\\.checkpoint\\.parquet"))
-      .map(_.take(20).toLong).sorted
-    val multis = names
-      .filter(_.matches("\\d{20}\\.checkpoint\\.\\d+\\.\\d+\\.parquet"))
-      .map(_.take(20).toLong).distinct.sorted
-    (singles, multis)
-  }
+  def versions(spark: SparkSession, path: String): Seq[Long] =
+    readerLog(spark, path).versions
 
   /** Reader requirements collected during replay — validated against
     * the FINAL metaData configuration once replay completes.
@@ -205,15 +190,18 @@ object DeltaRead {
   def snapshot(
       spark: SparkSession,
       path: String,
+      asOf: Option[Long] = None): DeltaSnapshot =
+    snapshotOf(readerLog(spark, path), asOf)
+
+  /** [[snapshot]] over an already-listed log. */
+  private[sources] def snapshotOf(
+      log: DeltaLog,
       asOf: Option[Long] = None): DeltaSnapshot = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val root = fs.makeQualified(p)
-    val logDir = new Path(root, "_delta_log")
-    if (!fs.exists(logDir)) fail(path, "no _delta_log — not a Delta table")
-    val jsons = listJsonVersions(fs, logDir, path)
-    val (singles, multis) = listCheckpoints(fs, logDir)
-    val known = jsons ++ singles ++ multis
+    val path = log.path
+    val jsons = log.jsons.keys.toSeq
+    val singles = log.singles.keys.toSeq
+    val multis = log.multis.keys.toSeq
+    val known = log.versions
     if (known.isEmpty) fail(path, "empty _delta_log")
     asOf.foreach { v =>
       if (!known.contains(v))
@@ -227,30 +215,21 @@ object DeltaRead {
     def reaches(c: Long): Boolean =
       c <= upTo && ((c + 1) to upTo).forall(jsonSet.contains)
     // base = the newest usable checkpoint version; at a tie, the
-    // single-part file wins (one read instead of n)
-    val base: Option[(Long, Boolean)] =
+    // single-part file wins (one read instead of n —
+    // DeltaLog.checkpointFiles prefers it)
+    val base: Option[Long] =
       if (pureJson) None
-      else {
-        val usableSingle = singles.filter(reaches).lastOption
-        val usableMulti = multis.filter(reaches).lastOption
-        (usableSingle, usableMulti) match {
-          case (Some(s), Some(m)) if m > s => Some((m, true))
-          case (Some(s), _) => Some((s, false))
-          case (None, Some(m)) => Some((m, true))
-          case (None, None) =>
-            if (jsons.isEmpty || jsons.head != 0L)
-              fail(path, s"log starts at version " +
-                s"${jsons.headOption.getOrElse(-1L)}, not 0, and no " +
-                s"usable checkpoint reaches version $upTo — early " +
-                "commits were vacuumed after a checkpoint; read this " +
-                "table with a full engine")
-            else {
-              val missing = (0L to upTo).find(v => !jsonSet.contains(v)).get
-              fail(path, s"log gap: version $missing missing — " +
-                "truncated or checkpoint-compacted log without a " +
-                "usable checkpoint is unsupported")
-            }
-        }
+      else (singles ++ multis).filter(reaches).maxOption.orElse {
+        if (jsons.isEmpty || jsons.head != 0L)
+          fail(path, s"log starts at version " +
+            s"${jsons.headOption.getOrElse(-1L)}, not 0, and no " +
+            s"usable checkpoint reaches version $upTo — early " +
+            "commits were vacuumed after a checkpoint; read this " +
+            "table with a full engine")
+        val missing = (0L to upTo).find(v => !jsonSet.contains(v)).get
+        fail(path, s"log gap: version $missing missing — " +
+          "truncated or checkpoint-compacted log without a " +
+          "usable checkpoint is unsupported")
       }
     var schema: Option[StructType] = None
     var partCols: Seq[String] = Nil
@@ -260,34 +239,18 @@ object DeltaRead {
     val live = mutable.LinkedHashMap.empty[String, DeltaFile]
     val setMetaInfo: (String, Map[String, String]) => Unit =
       (id, cfg) => { metaId = id; config = cfg }
-    base.foreach { case (c, isMulti) =>
-      val parts =
-        if (!isMulti) Seq(new Path(logDir, f"$c%020d.checkpoint.parquet"))
-        else multiPartFiles(fs, logDir, path, c)
-      loadCheckpoint(spark, path, parts, c,
+    base.foreach { c =>
+      loadCheckpoint(log, c,
         s => schema = Some(s), pc => partCols = pc, setMetaInfo, live,
         reqs)
     }
-    val firstJson = base.map(_._1 + 1).getOrElse(0L)
+    val firstJson = base.map(_ + 1).getOrElse(0L)
     (firstJson to upTo).foreach { v =>
-      val mp = new Path(logDir, f"$v%020d.json")
-      val st = fs.getFileStatus(mp)
-      if (st.getLen > MaxLogFileBytes)
-        fail(path, s"commit $v is ${st.getLen} bytes — hostile size")
-      val bytes = new Array[Byte](st.getLen.toInt)
-      val in = fs.open(mp)
-      try in.readFully(0, bytes) finally in.close()
-      new String(bytes, "UTF-8").linesIterator
-        .map(_.trim).filter(_.nonEmpty).foreach { line =>
-          val node =
-            try mapper.readTree(line)
-            catch { case e: Exception =>
-              fail(path, s"commit $v: unparseable action line (${e.getMessage})")
-            }
-          applyAction(path, v, node,
-            s => schema = Some(s), pc => partCols = pc, setMetaInfo, live,
-            reqs)
-        }
+      log.actions(v, strict = true).foreach { node =>
+        applyAction(path, v, node,
+          s => schema = Some(s), pc => partCols = pc, setMetaInfo, live,
+          reqs)
+      }
     }
     val sch = schema.getOrElse(
       fail(path, "no metaData action in log — schema unknown"))
@@ -302,38 +265,6 @@ object DeltaRead {
             "carries no delta.columnMapping.id — malformed schema")
       }
     snap
-  }
-
-  /** All parts of a complete multi-part checkpoint at `version`, in
-    * part order; a torn set (missing part, inconsistent n) refuses.
-    */
-  private def multiPartFiles(
-      fs: org.apache.hadoop.fs.FileSystem,
-      logDir: Path,
-      path: String,
-      version: Long): Seq[Path] = {
-    val prefix = f"$version%020d.checkpoint."
-    val re = "\\d{20}\\.checkpoint\\.(\\d+)\\.(\\d+)\\.parquet".r
-    val parts = fs.listStatus(logDir).toSeq
-      .map(_.getPath.getName)
-      .filter(n => n.startsWith(prefix) && n.endsWith(".parquet"))
-      .flatMap {
-        case nm @ re(i, n) => Some((i.toInt, n.toInt, nm))
-        case _ => None
-      }
-    if (parts.isEmpty)
-      fail(path, s"multi-part checkpoint $version: no parts found")
-    val ns = parts.map(_._2).distinct
-    if (ns.size != 1)
-      fail(path, s"multi-part checkpoint $version: inconsistent part " +
-        s"counts ${ns.sorted.mkString(",")} — torn checkpoint")
-    val n = ns.head
-    val byPart = parts.map(t => t._1 -> t._3).toMap
-    val missing = (1 to n).filterNot(byPart.contains)
-    if (missing.nonEmpty)
-      fail(path, s"multi-part checkpoint $version: missing part(s) " +
-        s"${missing.mkString(",")} of $n — torn checkpoint")
-    (1 to n).map(i => new Path(logDir, byPart(i)))
   }
 
   /** Refuse (loudly) when a column-mapped schema maps NESTED fields:
@@ -372,31 +303,26 @@ object DeltaRead {
     * (`sidecar`/`checkpointMetadata`) refuse.
     */
   private def loadCheckpoint(
-      spark: SparkSession,
-      path: String,
-      parts: Seq[Path],
+      log: DeltaLog,
       version: Long,
       setSchema: StructType => Unit,
       setPartCols: Seq[String] => Unit,
       setMetaInfo: (String, Map[String, String]) => Unit,
       live: mutable.LinkedHashMap[String, DeltaFile],
       reqs: ReaderReqs): Unit = {
-    val df = spark.read.parquet(parts.map(_.toString): _*)
+    val path = log.path
+    val df = log.checkpointDf(log.checkpointFiles(version))
     val top = df.schema.fieldNames.toSet
     Seq("sidecar", "checkpointMetadata").foreach { c =>
       if (top.contains(c))
         fail(path, s"checkpoint $version carries a '$c' column — v2 " +
           "checkpoints are unsupported (classic only)")
     }
-    def fieldsOf(c: String): Set[String] =
-      df.schema(c).dataType.asInstanceOf[StructType].fieldNames.toSet
+    def field(c: String, t: String): Column = DeltaLog.fieldOr(df, c, t)
     if (top.contains("protocol")) {
-      val pf = fieldsOf("protocol")
-      val featCol =
-        if (pf.contains("readerFeatures")) col("protocol.readerFeatures")
-        else lit(null).cast("array<string>")
       df.where(col("protocol").isNotNull)
-        .select(col("protocol.minReaderVersion"), featCol)
+        .select(col("protocol.minReaderVersion"),
+          field("protocol.readerFeatures", "array<string>"))
         .collect().foreach { r =>
           val mr = if (r.isNullAt(0)) 1 else r.getInt(0)
           val feats =
@@ -407,18 +333,12 @@ object DeltaRead {
     }
     if (!top.contains("metaData"))
       fail(path, s"checkpoint $version: no metaData column")
-    val mf = fieldsOf("metaData")
-    val idCol =
-      if (mf.contains("id")) col("metaData.id")
-      else lit(null).cast("string")
-    val cfgCol =
-      if (mf.contains("configuration")) col("metaData.configuration")
-      else lit(null).cast("map<string,string>")
     val metas = df.where(col("metaData").isNotNull)
       .select(col("metaData.schemaString"),
         col("metaData.partitionColumns"),
         col("metaData.format.provider"),
-        idCol, cfgCol)
+        field("metaData.id", "string"),
+        field("metaData.configuration", "map<string,string>"))
       .collect()
     if (metas.isEmpty)
       fail(path, s"checkpoint $version: no metaData row")
@@ -444,30 +364,19 @@ object DeltaRead {
     if (top.contains("add")) {
       val adds0 = df.where(col("add").isNotNull)
       val n = adds0.count()
-      if (n > MaxLogFiles)
+      if (n > DeltaLog.MaxLogFiles)
         fail(path, s"checkpoint $version holds $n live " +
-          s"files (> $MaxLogFiles) — driver replay refused; read this " +
-          "table with a full engine")
-      val af = fieldsOf("add")
-      val statsCol =
-        if (af.contains("stats")) col("add.stats")
-        else lit(null).cast("string")
-      val sizeCol =
-        if (af.contains("size")) col("add.size")
-        else lit(0L)
-      val dvCols =
-        if (af.contains("deletionVector"))
-          Seq(col("add.deletionVector.storageType"),
-            col("add.deletionVector.pathOrInlineDv"),
-            col("add.deletionVector.offset"),
-            col("add.deletionVector.sizeInBytes"),
-            col("add.deletionVector.cardinality"))
-        else Seq(lit(null).cast("string"), lit(null).cast("string"),
-          lit(null).cast("int"), lit(null).cast("int"),
-          lit(null).cast("long"))
+          s"files (> ${DeltaLog.MaxLogFiles}) — driver replay refused; " +
+          "read this table with a full engine")
       val rows = adds0
-        .select((Seq(col("add.path"), col("add.partitionValues"),
-          statsCol, sizeCol) ++ dvCols): _*)
+        .select(col("add.path"), col("add.partitionValues"),
+          field("add.stats", "string"),
+          coalesce(field("add.size", "long"), lit(0L)),
+          field("add.deletionVector.storageType", "string"),
+          field("add.deletionVector.pathOrInlineDv", "string"),
+          field("add.deletionVector.offset", "int"),
+          field("add.deletionVector.sizeInBytes", "int"),
+          field("add.deletionVector.cardinality", "long"))
         .collect()
       rows.foreach { r =>
         val raw = r.getString(0)
@@ -541,15 +450,7 @@ object DeltaRead {
       val id = Option(meta.get("id")).filter(!_.isNull)
         .map(_.asText()).getOrElse("")
       val cfg = Option(meta.get("configuration")).filter(!_.isNull)
-        .map { o =>
-          val it = o.properties().iterator()
-          val b = Map.newBuilder[String, String]
-          while (it.hasNext) {
-            val e = it.next()
-            b += e.getKey -> e.getValue.asText()
-          }
-          b.result()
-        }.getOrElse(Map.empty[String, String])
+        .map(DeltaLog.stringMap).getOrElse(Map.empty[String, String])
       setMetaInfo(id, cfg)
     }
     val add = node.get("add")
@@ -742,15 +643,9 @@ object DeltaRead {
       asOf: Option[Long] = None): Long = {
     val snap = snapshot(spark, path, asOf)
     snap.liveFiles.map { f =>
-      val n = f.stats.flatMap { s =>
-        try Option(mapper.readTree(s).get("numRecords"))
-          .filter(_.isNumber).map(_.asLong())
-        catch { case _: Exception => None }
-      }
-      val physical = n.getOrElse(fail(path, s"live file ${f.path} " +
+      f.liveRows.getOrElse(fail(path, s"live file ${f.path} " +
         "carries no numRecords stats — a metadata-only count would be " +
         "wrong; scan the table instead"))
-      physical - f.dv.map(_.cardinality).getOrElse(0L)
     }.sum
   }
 
@@ -780,65 +675,36 @@ object DeltaRead {
       fromVersion: Long,
       toVersion: Option[Long] = None,
       ignoreDeletes: Boolean = false): DataFrame = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val root = fs.makeQualified(p)
-    val logDir = new Path(root, "_delta_log")
-    if (!fs.exists(logDir)) fail(path, "no _delta_log — not a Delta table")
-    val jsons = listJsonVersions(fs, logDir, path).toSet
-    val known = versions(spark, path)
-    val upTo = toVersion.getOrElse(known.max)
-    if (fromVersion < 0 || fromVersion > upTo)
-      fail(path, s"version range $fromVersion..$upTo is empty/invalid")
-    (fromVersion to upTo).foreach { v =>
-      if (!jsons.contains(v))
-        fail(path, s"version $v has no JSON commit (checkpoint-" +
-          "compacted history) — per-version change attribution is " +
-          "gone; re-read the full table instead")
-    }
+    val (log, upTo) = changeRange(spark, path, fromVersion, toVersion)
     // schema/mapping/protocol state at the END of the range
-    val snap = snapshot(spark, path, asOf = Some(upTo))
+    val snap = snapshotOf(log, asOf = Some(upTo))
     val adds = Seq.newBuilder[(Long, DeltaFile)]
     (fromVersion to upTo).foreach { v =>
-      val mp = new Path(logDir, f"$v%020d.json")
-      val st = fs.getFileStatus(mp)
-      if (st.getLen > MaxLogFileBytes)
-        fail(path, s"commit $v is ${st.getLen} bytes — hostile size")
-      val bytes = new Array[Byte](st.getLen.toInt)
-      val in = fs.open(mp)
-      try in.readFully(0, bytes) finally in.close()
-      new String(bytes, "UTF-8").linesIterator
-        .map(_.trim).filter(_.nonEmpty).foreach { line =>
-          val node =
-            try mapper.readTree(line)
-            catch { case e: Exception =>
-              fail(path, s"commit $v: unparseable action line " +
-                s"(${e.getMessage})")
-            }
-          val remove = node.get("remove")
-          if (remove != null) {
-            val dataChange = Option(remove.get("dataChange"))
-              .forall(_.asBoolean(true))
-            if (dataChange && !ignoreDeletes)
-              fail(path, s"commit $v REMOVES data in the requested " +
-                "range — not pure append (updates/deletes would " +
-                "double-count); pass ignoreDeletes for " +
-                "retention-driven deletes or re-read the table")
-          }
-          val add = node.get("add")
-          if (add != null) {
-            val dataChange = Option(add.get("dataChange"))
-              .forall(_.asBoolean(true))
-            if (dataChange) {
-              if (Option(add.get("deletionVector")).exists(!_.isNull))
-                fail(path, s"commit $v adds a DV-carrying file — an " +
-                  "update, not an append; incremental read refused")
-              val raw = Option(add.get("path")).map(_.asText())
-                .getOrElse(fail(path, s"commit $v: add without path"))
-              adds += ((v, DeltaFile(raw, partitionValuesOf(add))))
-            }
+      log.actions(v, strict = true).foreach { node =>
+        val remove = node.get("remove")
+        if (remove != null) {
+          val dataChange = Option(remove.get("dataChange"))
+            .forall(_.asBoolean(true))
+          if (dataChange && !ignoreDeletes)
+            fail(path, s"commit $v REMOVES data in the requested " +
+              "range — not pure append (updates/deletes would " +
+              "double-count); pass ignoreDeletes for " +
+              "retention-driven deletes or re-read the table")
+        }
+        val add = node.get("add")
+        if (add != null) {
+          val dataChange = Option(add.get("dataChange"))
+            .forall(_.asBoolean(true))
+          if (dataChange) {
+            if (Option(add.get("deletionVector")).exists(!_.isNull))
+              fail(path, s"commit $v adds a DV-carrying file — an " +
+                "update, not an append; incremental read refused")
+            val raw = Option(add.get("path")).map(_.asText())
+              .getOrElse(fail(path, s"commit $v: add without path"))
+            adds += ((v, DeltaFile(raw, partitionValuesOf(add))))
           }
         }
+      }
     }
     // a path re-added within the range keeps its LAST add (the file is
     // scanned once; last-action-wins, same rule as replay). toSeq
@@ -855,7 +721,7 @@ object DeltaRead {
     val scan = scanFiles(spark, path, snap,
       added.map(_._2), keepFile = true)
     val verRows = added.map { case (v, f) =>
-      Row(fileKey(fs, root, f), v)
+      Row(fileKey(log.fs, log.root, f), v)
     }
     val javaRows = new java.util.ArrayList[Row](verRows.length)
     verRows.foreach(javaRows.add)
@@ -889,23 +755,10 @@ object DeltaRead {
       path: String,
       fromVersion: Long,
       toVersion: Option[Long] = None): DataFrame = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val root = fs.makeQualified(p)
-    val logDir = new Path(root, "_delta_log")
-    if (!fs.exists(logDir)) fail(path, "no _delta_log — not a Delta table")
-    val jsons = listJsonVersions(fs, logDir, path).toSet
-    val known = versions(spark, path)
-    val upTo = toVersion.getOrElse(known.max)
-    if (fromVersion < 0 || fromVersion > upTo)
-      fail(path, s"version range $fromVersion..$upTo is empty/invalid")
-    (fromVersion to upTo).foreach { v =>
-      if (!jsons.contains(v))
-        fail(path, s"version $v has no JSON commit (checkpoint-" +
-          "compacted history) — per-version change attribution is " +
-          "gone; re-read the full table instead")
-    }
-    val snap = snapshot(spark, path, asOf = Some(upTo))
+    val (log, upTo) = changeRange(spark, path, fromVersion, toVersion)
+    val fs = log.fs
+    val root = log.root
+    val snap = snapshotOf(log, asOf = Some(upTo))
     if (snap.columnMappingMode != "none")
       fail(path, "CDF read on a column-mapped table is unsupported; " +
         "read with a full engine")
@@ -914,43 +767,29 @@ object DeltaRead {
       .add("_commit_version", LongType)
     val parts = Seq.newBuilder[DataFrame]
     (fromVersion to upTo).foreach { v =>
-      val mp = new Path(logDir, f"$v%020d.json")
-      val st = fs.getFileStatus(mp)
-      if (st.getLen > MaxLogFileBytes)
-        fail(path, s"commit $v is ${st.getLen} bytes — hostile size")
-      val bytes = new Array[Byte](st.getLen.toInt)
-      val in = fs.open(mp)
-      try in.readFully(0, bytes) finally in.close()
       val cdcPaths = Seq.newBuilder[String]
       val adds = Seq.newBuilder[DeltaFile]
       val removes = Seq.newBuilder[String]
-      new String(bytes, "UTF-8").linesIterator
-        .map(_.trim).filter(_.nonEmpty).foreach { line =>
-          val node =
-            try mapper.readTree(line)
-            catch { case e: Exception =>
-              fail(path, s"commit $v: unparseable action line " +
-                s"(${e.getMessage})")
-            }
-          Option(node.get("cdc")).filter(!_.isNull).foreach { c =>
-            cdcPaths += Option(c.get("path")).map(_.asText())
-              .getOrElse(fail(path, s"commit $v: cdc without path"))
-          }
-          Option(node.get("add")).filter(!_.isNull).foreach { add =>
-            if (Option(add.get("dataChange")).forall(_.asBoolean(true)))
-              adds += DeltaFile(
-                Option(add.get("path")).map(_.asText()).getOrElse(
-                  fail(path, s"commit $v: add without path")),
-                partitionValuesOf(add),
-                dv = Option(add.get("deletionVector"))
-                  .filter(!_.isNull).map(dvDescriptorOf(path, v, _)))
-          }
-          Option(node.get("remove")).filter(!_.isNull).foreach { rm =>
-            if (Option(rm.get("dataChange")).forall(_.asBoolean(true)))
-              removes += Option(rm.get("path")).map(_.asText())
-                .getOrElse(fail(path, s"commit $v: remove without path"))
-          }
+      log.actions(v, strict = true).foreach { node =>
+        Option(node.get("cdc")).filter(!_.isNull).foreach { c =>
+          cdcPaths += Option(c.get("path")).map(_.asText())
+            .getOrElse(fail(path, s"commit $v: cdc without path"))
         }
+        Option(node.get("add")).filter(!_.isNull).foreach { add =>
+          if (Option(add.get("dataChange")).forall(_.asBoolean(true)))
+            adds += DeltaFile(
+              Option(add.get("path")).map(_.asText()).getOrElse(
+                fail(path, s"commit $v: add without path")),
+              partitionValuesOf(add),
+              dv = Option(add.get("deletionVector"))
+                .filter(!_.isNull).map(dvDescriptorOf(path, v, _)))
+        }
+        Option(node.get("remove")).filter(!_.isNull).foreach { rm =>
+          if (Option(rm.get("dataChange")).forall(_.asBoolean(true)))
+            removes += Option(rm.get("path")).map(_.asText())
+              .getOrElse(fail(path, s"commit $v: remove without path"))
+        }
+      }
       val cdcs = cdcPaths.result()
       val a = adds.result()
       val r = removes.result()
@@ -983,7 +822,7 @@ object DeltaRead {
           .withColumn("_commit_version", lit(v))
       } else if (r.nonEmpty) {
         // delete rows = the removed files' content at v-1
-        val prev = snapshot(spark, path, asOf = Some(v - 1))
+        val prev = snapshotOf(log, asOf = Some(v - 1))
         val prevByPath = prev.liveFiles.map(f => f.path -> f).toMap
         val files = r.map(rp => prevByPath.getOrElse(rp,
           fail(path, s"commit $v removes '$rp' which is not live at " +
@@ -1009,46 +848,43 @@ object DeltaRead {
   def versionTimestamps(
       spark: SparkSession,
       path: String): Seq[(Long, Long)] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val logDir = new Path(fs.makeQualified(p), "_delta_log")
-    if (!fs.exists(logDir)) fail(path, "no _delta_log — not a Delta table")
-    val jsons = listJsonVersions(fs, logDir, path).toSet
+    val log = readerLog(spark, path)
     var prev = Long.MinValue
-    versions(spark, path).map { v =>
-      val f =
-        if (jsons.contains(v)) new Path(logDir, f"$v%020d.json")
-        else {
-          val single = new Path(logDir, f"$v%020d.checkpoint.parquet")
-          if (fs.exists(single)) single
-          else new Path(logDir,
-            multiPartFiles(fs, logDir, path, v).head.getName)
-        }
-      val fromCommitInfo: Option[Long] =
-        if (!jsons.contains(v)) None
-        else {
-          val st = fs.getFileStatus(f)
-          if (st.getLen > MaxLogFileBytes)
-            fail(path, s"commit $v is ${st.getLen} bytes — hostile size")
-          val bytes = new Array[Byte](st.getLen.toInt)
-          val in = fs.open(f)
-          try in.readFully(0, bytes) finally in.close()
-          new String(bytes, "UTF-8").linesIterator
-            .map(_.trim).filter(_.nonEmpty)
-            .flatMap { line =>
-              try Option(mapper.readTree(line).get("commitInfo"))
-                .filter(!_.isNull)
-                .flatMap(ci => Option(ci.get("timestamp"))
-                  .filter(_.isNumber).map(_.asLong()))
-              catch { case _: Exception => None }
-            }.nextOption()
-        }
-      val ts = fromCommitInfo.getOrElse(
-        fs.getFileStatus(f).getModificationTime)
+    log.versions.map { v =>
+      val ts = log.jsons.get(v) match {
+        case Some(st) =>
+          log.actions(v, strict = false).iterator
+            .flatMap(n => Option(n.get("commitInfo")).filter(!_.isNull))
+            .flatMap(ci => Option(ci.get("timestamp")).filter(_.isNumber))
+            .map(_.asLong()).nextOption()
+            .getOrElse(st.getModificationTime)
+        case None => log.checkpointFiles(v).head.getModificationTime
+      }
       val mono = math.max(ts, prev)
       prev = mono
       (v, mono)
     }
+  }
+
+  /** The log, the range's end (default: latest) and a refusal when the
+    * range is empty or any version in it has no JSON commit.
+    */
+  private def changeRange(
+      spark: SparkSession,
+      path: String,
+      fromVersion: Long,
+      toVersion: Option[Long]): (DeltaLog, Long) = {
+    val log = readerLog(spark, path)
+    val upTo = toVersion.getOrElse(log.versions.max)
+    if (fromVersion < 0 || fromVersion > upTo)
+      fail(path, s"version range $fromVersion..$upTo is empty/invalid")
+    (fromVersion to upTo).foreach { v =>
+      if (!log.jsons.contains(v))
+        fail(path, s"version $v has no JSON commit (checkpoint-" +
+          "compacted history) — per-version change attribution is " +
+          "gone; re-read the full table instead")
+    }
+    (log, upTo)
   }
 
   /** Resolve an instant (epoch millis) to the version the table was

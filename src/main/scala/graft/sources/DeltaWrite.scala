@@ -28,19 +28,32 @@ import org.apache.spark.sql.types.{LongType, StructType}
   *     and zone-map skipping. Real writers fold this into the write
   *     itself; the extra pass here touches only this commit's data,
   *     never the table.
-  *  3. **Commit = ONE create-exclusive JSON** at the next version.
-  *     Version collision means a concurrent writer won that number:
-  *     appends re-validate the schema and retry at the new tip
-  *     (appends conflict with nothing but metadata changes);
-  *     overwrites re-snapshot so the remove set covers the winner's
-  *     files too. Bounded retries, loud failure.
+  *  3. **Commit = ONE create-exclusive JSON** at the next version,
+  *     through the one commit loop every verb shares. Version
+  *     collision means a concurrent writer won that number; the loop
+  *     re-lists the log and applies the verb's own race rule before
+  *     retrying at the new tip: appends re-check the txn and the
+  *     schema (appends conflict with nothing but metadata changes),
+  *     overwrites also re-snapshot so the remove set covers the
+  *     winner's files; merge, optimize and the DV DML verbs retry only
+  *     when what they read is provably unchanged; restore and
+  *     enableFeature recompute their actions. Bounded retries, loud
+  *     failure.
+  *
+  * The log is read through [[DeltaLog]] only: one listing per attempt
+  * and one lenient all-history scan of what the log declares (every
+  * JSON commit, below a checkpoint too, and every checkpoint, single-
+  * or multi-part) behind the writer gate, the deletion-vector
+  * declaration check, the txn counters and the protocol row that
+  * [[checkpoint]] writes.
   *
   * Scope guards (refuse loudly, never corrupt): existing tables must
-  * replay under [[DeltaRead]]'s reader-v1 gate, need
-  * minWriterVersion <= 2 with no writerFeatures, and must not set
-  * `delta.appendOnly` when overwriting; schemas must match the table
-  * exactly (field names + types; nullability ignored) — evolution is
-  * a different operation, not a silent side effect of a write.
+  * replay under [[DeltaRead]]'s reader gate, pass the writer gate
+  * (writer versions <= 4, or v7 whose features this writer honors)
+  * and must not declare `delta.appendOnly` when overwriting; schemas
+  * must match the table exactly (field names + types; nullability
+  * ignored) — evolution is a different operation, not a silent side
+  * effect of a write.
   */
 object DeltaWrite {
 
@@ -87,13 +100,9 @@ object DeltaWrite {
       partitionBy: Seq[String] = Seq.empty,
       collectStats: Boolean = true,
       maxRetries: Int = 10,
-      beforeCommit: () => Unit = () => ()): Option[Long] = {
-    val spark = df.sparkSession
-    if (lastTxnVersion(spark, tablePath, appId) >= txnVersion) None
-    else write(df, tablePath, partitionBy, overwrite = false,
-      collectStats, maxRetries, beforeCommit,
-      txn = Some((appId, txnVersion)))
-  }
+      beforeCommit: () => Unit = () => ()): Option[Long] =
+    write(df, tablePath, partitionBy, overwrite = false, collectStats,
+      maxRetries, beforeCommit, txn = Some((appId, txnVersion)))
 
   /** Replace the table's live content with `df` (remove every live
     * file + add the new ones, one atomic commit). The table must
@@ -141,20 +150,17 @@ object DeltaWrite {
       beforeCommit: () => Unit = () => ()): Long = {
     val spark = updates.sparkSession
     require(keyCols.nonEmpty, "merge needs at least one key column")
-    val p = new Path(tablePath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val root = fs.makeQualified(p)
-    val logDir = new Path(root, "_delta_log")
-    if (!fs.exists(logDir) || fs.listStatus(logDir).isEmpty)
-      fail(tablePath, "merge into a non-existent table")
-    val snap = DeltaRead.snapshot(spark, tablePath)
+    val log = openTable(spark, tablePath, "merge")
+    val fs = log.fs
+    val root = log.root
+    val snap = DeltaRead.snapshotOf(log)
     // missing generated columns compute (insert shape) before the
     // schema gate; provided ones get validated with the other row
     // obligations below
     val updates2 = completeGenerated(snap, updates)
     val dataDf = deleteCol.fold(updates2)(updates2.drop(_))
     checkSchema(tablePath, dataDf.schema, snap.partitionColumns, snap)
-    writerGate(spark, fs, logDir, root, overwrite = true)
+    writerGate(log, overwrite = true)
     keyCols.foreach { k =>
       if (!dataDf.columns.contains(k))
         fail(tablePath, s"merge key '$k' not in updates")
@@ -230,60 +236,38 @@ object DeltaWrite {
     // merge commit must carry cdc actions describing every row-level
     // change — downstream [[DeltaRead.readCdf]] consumers replay them
     // instead of refusing on the update-shape (remove+add) commit
-    val cdfEnabled = snap.configuration
-      .get("delta.enableChangeDataFeed").contains("true")
-    val cdcActions: Seq[String] =
-      if (!cdfEnabled) Seq.empty
-      else {
-        if (snap.partitionColumns.nonEmpty)
-          fail(tablePath, "CDF merge on a PARTITIONED table is " +
-            "unsupported (cdc files would need per-partition layout); " +
-            "merge refused rather than dropping change data")
-        val isDel = deleteCol
-          .map(d => coalesce(col(d).cast("boolean"), lit(false)))
-          .getOrElse(lit(false))
-        val updKeyFlag = upd
-          .withColumn("__is_del", isDel)
-          .select((keyExprs :+ col("__is_del")): _*)
-        // matched pre-rows: delete rows emit 'delete', updated rows
-        // emit 'update_preimage'; the post-rows split by whether the
-        // key existed (postimage) or is new (insert)
-        val pre = tbl.drop("__delta_file")
-          .join(updKeyFlag, keyCols, "inner")
-          .withColumn("_change_type",
-            when(col("__is_del"), lit("delete"))
-              .otherwise(lit("update_preimage")))
-          .drop("__is_del")
-        val tblKeys = tbl.select(keyExprs: _*).distinct()
-        val postExisting = inserts
-          .join(tblKeys, keyCols, "left_semi")
-          .withColumn("_change_type", lit("update_postimage"))
-        val postNew = inserts
-          .join(tblKeys, keyCols, "left_anti")
-          .withColumn("_change_type", lit("insert"))
-        val changes = pre.unionByName(postExisting).unionByName(postNew)
-          .select(snap.schema.map(f => col(f.name)) :+
-            col("_change_type"): _*)
-        writeChangeData(spark, fs, root, changes).map {
-          case (rel, size) => DeltaFixture.cdcLine(rel, size)
-        }
-      }
-    beforeCommit()
-    val lines = Seq.newBuilder[String]
-    lines += commitInfoLine("Merge")
-    cdcActions.foreach(lines += _)
-    affectedFiles.foreach(f => lines += DeltaFixture.removeLine(f.path))
-    newFiles.foreach { f =>
-      lines += DeltaFixture.addLine(
-        f.relPath, f.size, f.partitionValues, stats = f.stats)
+    val cdcActions = cdcLines(log, snap, "merge") {
+      val isDel = deleteCol
+        .map(d => coalesce(col(d).cast("boolean"), lit(false)))
+        .getOrElse(lit(false))
+      val updKeyFlag = upd
+        .withColumn("__is_del", isDel)
+        .select((keyExprs :+ col("__is_del")): _*)
+      // matched pre-rows: delete rows emit 'delete', updated rows
+      // emit 'update_preimage'; the post-rows split by whether the
+      // key existed (postimage) or is new (insert)
+      val pre = tbl.drop("__delta_file")
+        .join(updKeyFlag, keyCols, "inner")
+        .withColumn("_change_type",
+          when(col("__is_del"), lit("delete"))
+            .otherwise(lit("update_preimage")))
+        .drop("__is_del")
+      val tblKeys = tbl.select(keyExprs: _*).distinct()
+      val postExisting = inserts
+        .join(tblKeys, keyCols, "left_semi")
+        .withColumn("_change_type", lit("update_postimage"))
+      val postNew = inserts
+        .join(tblKeys, keyCols, "left_anti")
+        .withColumn("_change_type", lit("insert"))
+      pre.unionByName(postExisting).unionByName(postNew)
+        .select(snap.schema.map(f => col(f.name)) :+
+          col("_change_type"): _*)
     }
-    var version = snap.version + 1
-    var attempts = 0
-    while (!tryCommit(fs, logDir, version, lines.result())) {
-      attempts += 1
-      if (attempts > maxRetries)
-        fail(tablePath, s"merge lost $maxRetries version races — " +
-          "a committer is racing this merge; rerun against the new state")
+    beforeCommit()
+    val lines = commitInfoLine("Merge") +: (cdcActions ++
+      affectedFiles.map(f => DeltaFixture.removeLine(f.path)) ++
+      addLines(newFiles))
+    commitOnce(log, "merge", maxRetries, lines) { now =>
       // a concurrent commit exists: safe only if the table state this
       // merge computed against is PROVABLY unchanged — live (path, DV)
       // set AND schema AND partition columns AND configuration. The DV
@@ -291,21 +275,19 @@ object DeltaWrite {
       // identical while masking rows, and this merge's survivors were
       // computed from the pre-DV scan — committing them would
       // resurrect the concurrently deleted rows.
-      val now = DeltaRead.snapshot(spark, tablePath)
+      val cur = DeltaRead.snapshotOf(now)
       val same =
-        now.liveFiles.map(f => (f.path, f.dv)).sortBy(_._1) ==
+        cur.liveFiles.map(f => (f.path, f.dv)).sortBy(_._1) ==
           snap.liveFiles.map(f => (f.path, f.dv)).sortBy(_._1) &&
-        now.schema == snap.schema &&
-        now.partitionColumns == snap.partitionColumns &&
-        now.configuration == snap.configuration
+        cur.schema == snap.schema &&
+        cur.partitionColumns == snap.partitionColumns &&
+        cur.configuration == snap.configuration
       if (!same)
         fail(tablePath, "concurrent commit changed the table state " +
           "(live files, schema, partitioning, or configuration) " +
           "during merge — rerun the merge against the new state " +
           "(staged files are inert orphans)")
-      version = DeltaRead.versions(spark, tablePath).max + 1
     }
-    version
   }
 
   /** What [[vacuum]] found and (unless dryRun) deleted. */
@@ -390,15 +372,11 @@ object DeltaWrite {
       collectStats: Boolean = true,
       maxRetries: Int = 10,
       beforeCommit: () => Unit = () => ()): Long = {
-    val spark = df.sparkSession
-    val p = new Path(tablePath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val root = fs.makeQualified(p)
-    val logDir = new Path(root, "_delta_log")
-    if (!fs.exists(logDir) || fs.listStatus(logDir).isEmpty)
+    val log = DeltaLog.open(df.sparkSession, tablePath)
+    if (!log.nonEmpty)
       return append(df, tablePath, partitionBy, collectStats,
         maxRetries, beforeCommit)
-    val snap = DeltaRead.snapshot(spark, tablePath)
+    val snap = DeltaRead.snapshotOf(log)
     if (partitionBy != snap.partitionColumns)
       fail(tablePath, s"partitionBy ${partitionBy.mkString(",")} != " +
         s"table's ${snap.partitionColumns.mkString(",")}")
@@ -424,44 +402,30 @@ object DeltaWrite {
       return append(df, tablePath, partitionBy, collectStats,
         maxRetries, beforeCommit)
     val merged = StructType(snap.schema.fields ++ newCols)
-    writerGate(spark, fs, logDir, root, overwrite = false)
+    writerGate(log, overwrite = false)
     // row obligations reference existing columns only — the evolved
     // frame carries them all, so they survive evolution
     enforceRowObligations(tablePath, snap, dfE)
-    val newFiles = writeData(spark, fs, root,
+    val newFiles = writeData(log.spark, log.fs, log.root,
       dfE.select(merged.map(f => col(f.name)): _*),
       partitionBy, collectStats)
-    var version = DeltaRead.versions(spark, tablePath).max + 1
     beforeCommit()
-    val lines = Seq.newBuilder[String]
-    lines += commitInfoLine("AppendEvolve")
     // the metaData action REPLACES table metadata on replay: carry the
     // table id (protocol requires it stable for the table's lifetime)
     // and the existing configuration (delta.appendOnly etc.) through —
     // only the schemaString changes
-    lines += DeltaFixture.metaDataLine(
-      snap.metaId, merged, partitionBy,
-      configuration = snap.configuration)
-    newFiles.foreach { f =>
-      lines += DeltaFixture.addLine(
-        f.relPath, f.size, f.partitionValues, stats = f.stats)
-    }
-    var attempts = 0
-    while (!tryCommit(fs, logDir, version, lines.result())) {
-      attempts += 1
-      if (attempts > maxRetries)
-        fail(tablePath, s"appendEvolve lost $maxRetries version races")
+    val lines = Seq(commitInfoLine("AppendEvolve"),
+      DeltaFixture.metaDataLine(snap.metaId, merged, partitionBy,
+        configuration = snap.configuration)) ++ addLines(newFiles)
+    commitOnce(log, "appendEvolve", maxRetries, lines) { now =>
       // re-validate: a racer may have evolved the schema themselves
-      val now = DeltaRead.snapshot(spark, tablePath)
-      now.schema.foreach { f =>
+      DeltaRead.snapshotOf(now).schema.foreach { f =>
         if (!merged.fieldNames.contains(f.name) ||
           merged(f.name).dataType != f.dataType)
           fail(tablePath, "concurrent schema change during " +
             "appendEvolve — rerun against the new schema")
       }
-      version = DeltaRead.versions(spark, tablePath).max + 1
     }
-    version
   }
 
   /** RESTORE the table to the state it had at `toVersion` — as a NEW
@@ -480,17 +444,14 @@ object DeltaWrite {
       tablePath: String,
       toVersion: Long,
       maxRetries: Int = 10): Long = {
-    val p = new Path(tablePath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val root = fs.makeQualified(p)
-    val logDir = new Path(root, "_delta_log")
-    if (!fs.exists(logDir) || fs.listStatus(logDir).isEmpty)
-      fail(tablePath, "restore of a non-existent table")
-    val target = DeltaRead.snapshot(spark, tablePath, Some(toVersion))
-    writerGate(spark, fs, logDir, root, overwrite = true)
-    var attempts = 0
-    while (true) {
-      val now = DeltaRead.snapshot(spark, tablePath)
+    val log = openTable(spark, tablePath, "restore")
+    val fs = log.fs
+    val root = log.root
+    val target = DeltaRead.snapshotOf(log, Some(toVersion))
+    writerGate(log, overwrite = true)
+    // the lines are recomputed against the tip on every attempt
+    commitLoop(log, "restore", maxRetries) { (tip, _) =>
+      val now = DeltaRead.snapshotOf(tip)
       if (now.configuration.get("delta.enableChangeDataFeed")
         .contains("true"))
         fail(tablePath, "restore of a change-data-feed-enabled table " +
@@ -514,27 +475,18 @@ object DeltaWrite {
               s"vacuumed — version $toVersion is unrestorable")
         }
       }
-      val lines = Seq.newBuilder[String]
-      lines += commitInfoLine("Restore")
-      if (now.schema != target.schema ||
-        now.partitionColumns != target.partitionColumns ||
-        now.configuration != target.configuration)
-        lines += DeltaFixture.metaDataLine(
+      val meta =
+        if (now.schema == target.schema &&
+          now.partitionColumns == target.partitionColumns &&
+          now.configuration == target.configuration) Seq.empty
+        else Seq(DeltaFixture.metaDataLine(
           now.metaId, target.schema, target.partitionColumns,
-          configuration = target.configuration)
-      removes.foreach(f => lines += DeltaFixture.removeLine(f.path))
-      readds.foreach { f =>
-        lines += DeltaFixture.addLine(
-          f.path, f.size, f.partitionValues, stats = f.stats, dv = f.dv)
-      }
-      val version = now.version + 1
-      if (tryCommit(fs, logDir, version, lines.result()))
-        return version
-      attempts += 1
-      if (attempts > maxRetries)
-        fail(tablePath, s"restore lost $maxRetries version races")
-    }
-    sys.error("unreachable")
+          configuration = target.configuration))
+      Right(commitInfoLine("Restore") +: (meta ++
+        removes.map(f => DeltaFixture.removeLine(f.path)) ++
+        readds.map(f => DeltaFixture.addLine(f.path, f.size,
+          f.partitionValues, stats = f.stats, dv = f.dv))))
+    }.get
   }
 
   /** What [[optimize]] rewrote. */
@@ -561,14 +513,9 @@ object DeltaWrite {
       maxRetries: Int = 10,
       beforeCommit: () => Unit = () => ()): OptimizeReport = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
-    val p = new Path(tablePath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val root = fs.makeQualified(p)
-    val logDir = new Path(root, "_delta_log")
-    if (!fs.exists(logDir) || fs.listStatus(logDir).isEmpty)
-      fail(tablePath, "optimize of a non-existent table")
-    val snap = DeltaRead.snapshot(spark, tablePath)
-    writerGate(spark, fs, logDir, root, overwrite = false)
+    val log = openTable(spark, tablePath, "optimize")
+    val snap = DeltaRead.snapshotOf(log)
+    writerGate(log, overwrite = false)
     val groups = snap.liveFiles
       .filter(f => f.size > 0 && f.size < targetFileBytes && f.dv.isEmpty)
       .groupBy(_.partitionValues)
@@ -584,35 +531,23 @@ object DeltaWrite {
         data.repartition(math.max(n, groups.size),
           snap.partitionColumns.map(col): _*)
       else data.repartition(n)
-    val newFiles = writeData(spark, fs, root, packed,
+    val newFiles = writeData(spark, log.fs, log.root, packed,
       snap.partitionColumns, collectStats = true)
     beforeCommit()
-    val lines = Seq.newBuilder[String]
-    lines += commitInfoLine("Optimize")
-    toRewrite.foreach(f =>
-      lines += DeltaFixture.removeLine(f.path, dataChange = false))
-    newFiles.foreach { f =>
-      lines += DeltaFixture.addLine(
-        f.relPath, f.size, f.partitionValues, stats = f.stats,
-        dataChange = false)
-    }
-    var version = snap.version + 1
-    var attempts = 0
-    while (!tryCommit(fs, logDir, version, lines.result())) {
-      attempts += 1
-      if (attempts > maxRetries)
-        fail(tablePath, s"optimize lost $maxRetries version races")
+    val lines = commitInfoLine("Optimize") +: (toRewrite.map(f =>
+      DeltaFixture.removeLine(f.path, dataChange = false)) ++
+      addLines(newFiles, dataChange = false))
+    val version = commitOnce(log, "optimize", maxRetries, lines) { now =>
       // safe to retry ONLY if every rewritten file is still live WITH
       // ITS DV UNCHANGED: a racing merge/overwrite may have removed
       // one, and a racing deleteWhere/updateWhere re-adds the SAME
       // path with a DV attached — either way the compacted files were
       // written from the pre-race scan and would resurrect rows
-      val now = DeltaRead.snapshot(spark, tablePath)
-      val nowDv = now.liveFiles.map(f => f.path -> f.dv).toMap
+      val nowDv = DeltaRead.snapshotOf(now).liveFiles
+        .map(f => f.path -> f.dv).toMap
       if (!toRewrite.forall(f => nowDv.get(f.path).contains(f.dv)))
         fail(tablePath, "concurrent commit removed or DV-masked a " +
           "file mid-optimize — rerun (staged files are inert orphans)")
-      version = DeltaRead.versions(spark, tablePath).max + 1
     }
     OptimizeReport(toRewrite.size.toLong, newFiles.size.toLong,
       Some(version))
@@ -646,15 +581,10 @@ object DeltaWrite {
       tablePath: String,
       predicate: Column,
       maxRetries: Int = 10): DeleteReport = {
-    val p = new Path(tablePath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val root = fs.makeQualified(p)
-    val logDir = new Path(root, "_delta_log")
-    if (!fs.exists(logDir) || fs.listStatus(logDir).isEmpty)
-      fail(tablePath, "deleteWhere on a non-existent table")
-    val snap = DeltaRead.snapshot(spark, tablePath)
-    writerGate(spark, fs, logDir, root, overwrite = true)
-    if (!dvDeclared(spark, fs, logDir))
+    val log = openTable(spark, tablePath, "deleteWhere")
+    val snap = DeltaRead.snapshotOf(log)
+    writerGate(log, overwrite = true)
+    if (!dvDeclared(log))
       fail(tablePath, "table protocol does not declare the " +
         "deletionVectors feature — DVs written here would be " +
         "silently IGNORED by non-DV readers (resurrected rows); " +
@@ -664,8 +594,6 @@ object DeltaWrite {
     // from each file's old DV by construction
     val scan = DeltaRead.scanFiles(spark, tablePath, snap,
       snap.liveFiles, keepFile = true, keepRowIndex = true)
-    val cdfEnabled = snap.configuration
-      .get("delta.enableChangeDataFeed").contains("true")
     // scratch-truncation rule: the matched set feeds the per-file
     // count, the DV authoring AND (under CDF) the cdc write — stage
     // it once at MATCHED volume instead of re-scanning the table per
@@ -673,110 +601,107 @@ object DeltaWrite {
     // round-trip is orders cheaper than a second full scan)
     val matchedAll = graft.ScratchSpace.materialize(
       scan.where(predicate), "delta_del_matched_")
-    val cdcActions: Seq[String] =
-      if (!cdfEnabled) Seq.empty
-      else {
-        if (snap.partitionColumns.nonEmpty)
-          fail(tablePath, "CDF deleteWhere on a PARTITIONED table " +
-            "is unsupported; refused rather than dropping change data")
-        writeChangeData(spark, fs, root,
-          matchedAll.select(snap.schema.map(f => col(f.name)) :+
-            lit("delete").as("_change_type"): _*)).map {
-          case (rel, size) => DeltaFixture.cdcLine(rel, size)
-        }
-      }
+    val cdcActions = cdcLines(log, snap, "deleteWhere") {
+      matchedAll.select(snap.schema.map(f => col(f.name)) :+
+        lit("delete").as("_change_type"): _*)
+    }
+    val mask = dvMask(log, snap, matchedAll) match {
+      case Some(m) => m
+      case None => return DeleteReport(0L, 0L, 0L, None)
+    }
+    val lines = commitInfoLine("Delete") +: (cdcActions ++ mask.lines)
+    val version = commitOnce(log, "deleteWhere", maxRetries, lines) {
+      mask.requireStable(_, "mid-delete")
+    }
+    DeleteReport(mask.perFile.values.sum, mask.perFile.size.toLong,
+      mask.fullyDead.toLong, Some(version))
+  }
+
+  /** The DV-mask step of [[deleteWhere]] and [[updateWhere]]: the
+    * matched rows' per-file counts (one map-side-partial aggregate),
+    * the fully-dead files — every LIVE row matched; plainly REMOVED
+    * without authoring a DV, so a whole-table DELETE degenerates to
+    * metadata-only removals instead of concentrating every row index
+    * of a file in one authoring task — and [[authorDvs]] for the rest.
+    * Files without stats cannot PROVE full death: they take the DV
+    * path, which is correct either way. `lines` are the remove and
+    * remove/re-add-with-DV actions. None when nothing matched.
+    */
+  private def dvMask(
+      log: DeltaLog,
+      snap: DeltaRead.DeltaSnapshot,
+      matchedAll: DataFrame): Option[DvMask] = {
+    val spark = log.spark
     val byKey = snap.liveFiles
-      .map(f => DeltaRead.fileKey(fs, root, f) -> f).toMap
-    // per-file matched counts FIRST (one map-side-partial aggregate):
-    // a file whose every LIVE row matched is plainly REMOVED without
-    // authoring a DV at all — the whole-table DELETE degenerates to
-    // metadata-only removals instead of concentrating every row index
-    // of a file in one authoring task (round-17 verdict residual)
+      .map(f => DeltaRead.fileKey(log.fs, log.root, f) -> f).toMap
     val perFile: Map[String, Long] = matchedAll
       .groupBy(col("__delta_file")).agg(count(lit(1)).as("__n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    if (perFile.isEmpty) return DeleteReport(0L, 0L, 0L, None)
-    def numRecords(f: DeltaRead.DeltaFile): Option[Long] =
-      f.stats.flatMap { s =>
-        try Option(mapper.readTree(s).get("numRecords"))
-          .filter(_.isNumber).map(_.asLong())
-        catch { case _: Exception => None }
-      }
-    def liveRows(f: DeltaRead.DeltaFile): Option[Long] =
-      numRecords(f).map(_ - f.dv.map(_.cardinality).getOrElse(0L))
-    val fullyDead: Set[String] = perFile.keySet.filter { k =>
-      byKey.get(k).exists(f => liveRows(f).contains(perFile(k)))
-    }
-    // files without stats cannot PROVE full death — they take the DV
-    // path, which is correct either way (an all-dead DV still masks)
+    if (perFile.isEmpty) return None
+    val fullyDead = perFile.keySet.filter { k =>
+      byKey.get(k).exists(_.liveRows.contains(perFile(k)))
+    }.toSeq.sorted
     val partialKeys = (perFile.keySet -- fullyDead).toSeq.sorted
     val touched =
-      if (partialKeys.isEmpty)
-        Array.empty[(String, String, Int, Int, Long, Long)]
+      if (partialKeys.isEmpty) Array.empty[(String, String, Int, Int, Long)]
       else {
         import spark.implicits._
         val partialDf = partialKeys.toDF("__delta_file")
-        authorDvs(spark, fs, root, byKey,
+        authorDvs(log, byKey,
           matchedAll.join(broadcast(partialDf), Seq("__delta_file"),
             "left_semi")
             .select(col("__delta_file"), col("__row_index")))
       }
-    val lines = Seq.newBuilder[String]
-    lines += commitInfoLine("Delete")
-    cdcActions.foreach(lines += _)
-    fullyDead.toSeq.sorted.foreach { key =>
-      lines += DeltaFixture.removeLine(byKey(key).path)
-    }
-    touched.foreach { case (key, enc, off, size, card, _) =>
-      val f = byKey.getOrElse(key,
-        fail(tablePath, s"matched rows from unknown file $key"))
-      lines += DeltaFixture.removeLine(f.path)
-      lines += DeltaFixture.addLine(
-        f.path, f.size, f.partitionValues, stats = f.stats,
-        dv = Some(DeletionVectors.DvDescriptor(
-          "u", enc, Some(off), size, card)))
-    }
-    var version = snap.version + 1
-    var attempts = 0
-    while (!tryCommit(fs, logDir, version, lines.result())) {
-      attempts += 1
-      if (attempts > maxRetries)
-        fail(tablePath, s"deleteWhere lost $maxRetries version races")
-      // retry is safe only if the matched files are all still live
-      // with the SAME DVs this pass read
-      val now = DeltaRead.snapshot(spark, tablePath)
-      val nowByKey = now.liveFiles
-        .map(f => DeltaRead.fileKey(fs, root, f) -> f).toMap
-      val stable = perFile.keySet.forall { key =>
-        nowByKey.get(key).exists(f => f.dv == byKey(key).dv)
+    val lines = fullyDead.map(k => DeltaFixture.removeLine(byKey(k).path)) ++
+      touched.toSeq.flatMap { case (key, enc, off, size, card) =>
+        val f = byKey.getOrElse(key,
+          fail(log.path, s"matched rows from unknown file $key"))
+        Seq(DeltaFixture.removeLine(f.path),
+          DeltaFixture.addLine(f.path, f.size, f.partitionValues,
+            stats = f.stats, dv = Some(DeletionVectors.DvDescriptor(
+              "u", enc, Some(off), size, card))))
       }
-      if (!stable)
-        fail(tablePath, "concurrent commit changed a touched file " +
-          "mid-delete — rerun against the new state")
-      version = DeltaRead.versions(spark, tablePath).max + 1
-    }
-    DeleteReport(perFile.values.sum, perFile.size.toLong,
-      fullyDead.size.toLong, Some(version))
+    Some(DvMask(perFile, fullyDead.size, lines, byKey))
   }
 
-  /** Distributed DV authoring shared by [[deleteWhere]] and
-    * [[updateWhere]]: matched (fileKey, row_index) pairs group by
+  /** What [[dvMask]] decided: matched rows per file key, the number of
+    * fully-dead files, the commit lines, and the live files it read.
+    */
+  private final case class DvMask(
+      perFile: Map[String, Long],
+      fullyDead: Int,
+      lines: Seq[String],
+      byKey: Map[String, DeltaRead.DeltaFile]) {
+
+    /** Race rule: retry only if every touched file is still live with
+      * the SAME DV this pass read.
+      */
+    def requireStable(now: DeltaLog, when: String): Unit = {
+      val nowByKey = DeltaRead.snapshotOf(now).liveFiles
+        .map(f => DeltaRead.fileKey(now.fs, now.root, f) -> f).toMap
+      if (!perFile.keySet.forall(k =>
+        nowByKey.get(k).exists(_.dv == byKey(k).dv)))
+        fail(now.path, "concurrent commit changed a touched file " +
+          s"$when — rerun against the new state")
+    }
+  }
+
+  /** Distributed DV authoring for [[dvMask]]: matched
+    * (fileKey, row_index) pairs group by
     * file; each executor task merges the file's EXISTING DV rows
     * (scans yield live rows only, so the sets are disjoint),
     * serializes the bitmap and writes the sidecar. Returns ONE
     * log-grain row per touched file: (fileKey, z85 uuid payload,
-    * offset, sizeInBytes, total cardinality, fresh rows this pass).
+    * offset, sizeInBytes, total cardinality).
     */
   private def authorDvs(
-      spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: Path,
+      log: DeltaLog,
       byKey: Map[String, DeltaRead.DeltaFile],
-      matched: DataFrame): Array[(String, String, Int, Int, Long, Long)] = {
-    import spark.implicits._
+      matched: DataFrame): Array[(String, String, Int, Int, Long)] = {
+    import log.spark.implicits._
     val confH = new graft.operators.HadoopConfHolder(
-      spark.sessionState.newHadoopConf())
-    val rootStr = root.toString
+      log.spark.sessionState.newHadoopConf())
+    val rootStr = log.root.toString
     val oldDvs: Map[String, DeletionVectors.DvDescriptor] =
       byKey.collect { case (k, f) if f.dv.nonEmpty => k -> f.dv.get }
     matched.as[(String, Long)]
@@ -796,8 +721,7 @@ object DeltaWrite {
         ub.putLong(uuid.getMostSignificantBits)
         ub.putLong(uuid.getLeastSignificantBits)
         (fileKey, DeletionVectors.z85Encode(ub.array()),
-          spans.head._1, spans.head._2, all.length.toLong,
-          fresh.length.toLong)
+          spans.head._1, spans.head._2, all.length.toLong)
       }.collect() // log grain: ONE row per touched file
   }
 
@@ -826,13 +750,8 @@ object DeltaWrite {
       set: Map[String, Column],
       maxRetries: Int = 10): UpdateReport = {
     require(set.nonEmpty, "updateWhere needs at least one SET column")
-    val p = new Path(tablePath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val root = fs.makeQualified(p)
-    val logDir = new Path(root, "_delta_log")
-    if (!fs.exists(logDir) || fs.listStatus(logDir).isEmpty)
-      fail(tablePath, "updateWhere on a non-existent table")
-    val snap = DeltaRead.snapshot(spark, tablePath)
+    val log = openTable(spark, tablePath, "updateWhere")
+    val snap = DeltaRead.snapshotOf(log)
     val genMap = generatedCols(snap).toMap
     set.keys.foreach { c =>
       if (!snap.schema.fieldNames.contains(c))
@@ -845,8 +764,8 @@ object DeltaWrite {
           "it is derived; update its source columns and the value " +
           "recomputes automatically")
     }
-    writerGate(spark, fs, logDir, root, overwrite = true)
-    if (!dvDeclared(spark, fs, logDir))
+    writerGate(log, overwrite = true)
+    if (!dvDeclared(log))
       fail(tablePath, "table protocol does not declare the " +
         "deletionVectors feature — use merge for copy-on-write updates")
     val scan = DeltaRead.scanFiles(spark, tablePath, snap,
@@ -866,136 +785,37 @@ object DeltaWrite {
         .getOrElse(col(f.name))): _*)
     // row obligations over the updated images (the only fresh rows)
     enforceRowObligations(tablePath, snap, updatedRowsDf)
-    val cdfEnabled = snap.configuration
-      .get("delta.enableChangeDataFeed").contains("true")
-    val cdcActions: Seq[String] =
-      if (!cdfEnabled) Seq.empty
-      else {
-        if (snap.partitionColumns.nonEmpty)
-          fail(tablePath, "CDF updateWhere on a PARTITIONED table " +
-            "is unsupported; refused rather than dropping change data")
-        val pre = matchedAll.select(snap.schema.map(f =>
-          col(f.name)) :+ lit("update_preimage").as("_change_type"): _*)
-        val post = updatedRowsDf
-          .withColumn("_change_type", lit("update_postimage"))
-        writeChangeData(spark, fs, root, pre.unionByName(post)).map {
-          case (rel, size) => DeltaFixture.cdcLine(rel, size)
-        }
-      }
-    val byKey = snap.liveFiles
-      .map(f => DeltaRead.fileKey(fs, root, f) -> f).toMap
-    // per-file matched counts first — fully-updated files are plainly
-    // REMOVED (their images re-append below) without authoring an
-    // all-dead DV, the same whole-file fast path as deleteWhere
-    val perFile: Map[String, Long] = matchedAll
-      .groupBy(col("__delta_file")).agg(count(lit(1)).as("__n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    if (perFile.isEmpty) return UpdateReport(0L, 0L, 0L, None)
-    def numRecords(f: DeltaRead.DeltaFile): Option[Long] =
-      f.stats.flatMap { s =>
-        try Option(mapper.readTree(s).get("numRecords"))
-          .filter(_.isNumber).map(_.asLong())
-        catch { case _: Exception => None }
-      }
-    def liveRows(f: DeltaRead.DeltaFile): Option[Long] =
-      numRecords(f).map(_ - f.dv.map(_.cardinality).getOrElse(0L))
-    val fullyDead: Set[String] = perFile.keySet.filter { k =>
-      byKey.get(k).exists(f => liveRows(f).contains(perFile(k)))
+    val cdcActions = cdcLines(log, snap, "updateWhere") {
+      val pre = matchedAll.select(snap.schema.map(f =>
+        col(f.name)) :+ lit("update_preimage").as("_change_type"): _*)
+      val post = updatedRowsDf
+        .withColumn("_change_type", lit("update_postimage"))
+      pre.unionByName(post)
     }
-    val partialKeys = (perFile.keySet -- fullyDead).toSeq.sorted
-    val touched =
-      if (partialKeys.isEmpty)
-        Array.empty[(String, String, Int, Int, Long, Long)]
-      else {
-        import spark.implicits._
-        val partialDf = partialKeys.toDF("__delta_file")
-        authorDvs(spark, fs, root, byKey,
-          matchedAll.join(broadcast(partialDf), Seq("__delta_file"),
-            "left_semi")
-            .select(col("__delta_file"), col("__row_index")))
-      }
+    // fully-updated files are plainly REMOVED (their images re-append
+    // below) without authoring an all-dead DV
+    val mask = dvMask(log, snap, matchedAll) match {
+      case Some(m) => m
+      case None => return UpdateReport(0L, 0L, 0L, None)
+    }
     // the updated images append as ordinary data files
-    val newFiles = writeData(spark, fs, root, updatedRowsDf,
+    val newFiles = writeData(spark, log.fs, log.root, updatedRowsDf,
       snap.partitionColumns, collectStats = true)
-    val lines = Seq.newBuilder[String]
-    lines += commitInfoLine("Update")
-    cdcActions.foreach(lines += _)
-    fullyDead.toSeq.sorted.foreach { key =>
-      lines += DeltaFixture.removeLine(byKey(key).path)
+    val lines = commitInfoLine("Update") +:
+      (cdcActions ++ mask.lines ++ addLines(newFiles))
+    val version = commitOnce(log, "updateWhere", maxRetries, lines) {
+      mask.requireStable(_, "mid-update")
     }
-    touched.foreach { case (key, enc, off, size, card, _) =>
-      val f = byKey.getOrElse(key,
-        fail(tablePath, s"matched rows from unknown file $key"))
-      lines += DeltaFixture.removeLine(f.path)
-      lines += DeltaFixture.addLine(
-        f.path, f.size, f.partitionValues, stats = f.stats,
-        dv = Some(DeletionVectors.DvDescriptor(
-          "u", enc, Some(off), size, card)))
-    }
-    newFiles.foreach { f =>
-      lines += DeltaFixture.addLine(
-        f.relPath, f.size, f.partitionValues, stats = f.stats)
-    }
-    var version = snap.version + 1
-    var attempts = 0
-    while (!tryCommit(fs, logDir, version, lines.result())) {
-      attempts += 1
-      if (attempts > maxRetries)
-        fail(tablePath, s"updateWhere lost $maxRetries version races")
-      val now = DeltaRead.snapshot(spark, tablePath)
-      val nowByKey = now.liveFiles
-        .map(f => DeltaRead.fileKey(fs, root, f) -> f).toMap
-      val stable = perFile.keySet.forall { key =>
-        nowByKey.get(key).exists(f => f.dv == byKey(key).dv)
-      }
-      if (!stable)
-        fail(tablePath, "concurrent commit changed a touched file " +
-          "mid-update — rerun against the new state")
-      version = DeltaRead.versions(spark, tablePath).max + 1
-    }
-    UpdateReport(perFile.values.sum, perFile.size.toLong,
+    UpdateReport(mask.perFile.values.sum, mask.perFile.size.toLong,
       newFiles.size.toLong, Some(version))
   }
 
-  /** True when any protocol action in the log chain declares the
-    * deletionVectors reader feature (JSON commits or checkpoint
-    * protocol rows).
+  /** True when any protocol action in the log — any JSON commit or
+    * checkpoint protocol row — declares the deletionVectors reader
+    * feature.
     */
-  private def dvDeclared(
-      spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      logDir: Path): Boolean = {
-    val names = fs.listStatus(logDir).toSeq.map(_.getPath.getName)
-    val inJson = names.filter(_.matches("\\d{20}\\.json")).exists { n =>
-      val bytes = graft.ScratchSpace.readBytes(
-        spark, new Path(logDir, n).toString)
-      new String(bytes, "UTF-8").linesIterator
-        .map(_.trim).filter(_.nonEmpty)
-        .flatMap { line =>
-          try Some(mapper.readTree(line))
-          catch { case _: Exception => None }
-        }
-        .exists { node =>
-          Option(node.get("protocol")).exists(p =>
-            Option(p.get("readerFeatures")).exists(rf =>
-              rf.toString.contains("deletionVectors")))
-        }
-    }
-    inJson || names.filter(_.matches("\\d{20}\\.checkpoint\\.parquet"))
-      .exists { n =>
-        val cp = spark.read.parquet(new Path(logDir, n).toString)
-        cp.schema.fieldNames.contains("protocol") && {
-          val pf = cp.schema("protocol").dataType
-            .asInstanceOf[StructType].fieldNames.toSet
-          pf.contains("readerFeatures") &&
-          cp.where(col("protocol").isNotNull)
-            .select(col("protocol.readerFeatures").cast("string"))
-            .collect()
-            .exists(r => !r.isNullAt(0) &&
-              r.getString(0).contains("deletionVectors"))
-        }
-      }
-  }
+  private def dvDeclared(log: DeltaLog): Boolean =
+    log.declared.protocols.exists(_.readerFeatures.contains("deletionVectors"))
 
   private def write(
       df: DataFrame,
@@ -1007,18 +827,20 @@ object DeltaWrite {
       beforeCommit: () => Unit,
       txn: Option[(String, Long)]): Option[Long] = {
     val spark = df.sparkSession
+    val log = DeltaLog.open(spark, tablePath)
+    // a txn version the table already holds is a replay: skip it
+    // before writing any data
+    def replayed(l: DeltaLog): Boolean = txn.exists { case (app, v) =>
+      l.declared.txns.getOrElse(app, -1L) >= v
+    }
+    if (replayed(log)) return None
     partitionBy.foreach { c =>
       if (!df.columns.contains(c))
         fail(tablePath, s"partition column '$c' not in DataFrame " +
           s"(have ${df.columns.mkString(",")})")
     }
-    val p = new Path(tablePath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val root = fs.makeQualified(p)
-    val logDir = new Path(root, "_delta_log")
-    LakeCommit.gate(spark, root) // table-create path has no writerGate
-    val exists = fs.exists(logDir) && fs.listStatus(logDir).nonEmpty
-    if (!exists && overwrite)
+    LakeCommit.gate(spark, log.root) // table-create path has no writerGate
+    if (!log.nonEmpty && overwrite)
       fail(tablePath, "overwrite of a non-existent table — create it " +
         "with append first (an overwrite that silently creates hides " +
         "path typos)")
@@ -1029,11 +851,11 @@ object DeltaWrite {
     // appendOnly, and the row obligations (constraints, invariants,
     // generated-value consistency)
     val existingSnap =
-      if (exists) Some(DeltaRead.snapshot(spark, tablePath)) else None
+      if (log.nonEmpty) Some(DeltaRead.snapshotOf(log)) else None
     val dfW = existingSnap.map(completeGenerated(_, df)).getOrElse(df)
     existingSnap.foreach { snap =>
       checkSchema(tablePath, dfW.schema, partitionBy, snap)
-      writerGate(spark, fs, logDir, root, overwrite)
+      writerGate(log, overwrite)
       enforceRowObligations(tablePath, snap, dfW)
       // an overwrite is an update-shape commit (removes + adds):
       // under CDF the protocol requires cdc files for it, and this
@@ -1046,48 +868,32 @@ object DeltaWrite {
           "merge writes the feed, or disable CDF first")
     }
 
-    val newFiles = writeData(spark, fs, root, dfW, partitionBy, collectStats)
-
-    var attempt = 0
-    var version =
-      existingSnap.map(_ => DeltaRead.versions(spark, tablePath).max + 1)
-        .getOrElse(0L)
+    val newFiles = writeData(spark, log.fs, log.root, dfW, partitionBy,
+      collectStats)
     var removes: Seq[String] =
       if (overwrite) existingSnap.get.liveFiles.map(_.path) else Seq.empty
-    while (true) {
-      beforeCommit()
-      val lines = Seq.newBuilder[String]
-      lines += commitInfoLine(if (overwrite) "Overwrite" else "Append")
-      if (version == 0L) {
-        lines += DeltaFixture.protocolLine()
-        lines += DeltaFixture.metaDataLine(
-          java.util.UUID.randomUUID().toString, df.schema, partitionBy)
+    commitLoop(log, if (overwrite) "overwrite" else "append",
+      maxRetries) { (tip, retry) =>
+      // a concurrent writer took the version: re-validate at the tip
+      // (a replayed txn means the racer WAS this txn)
+      if (retry && replayed(tip)) Left(None)
+      else {
+        if (retry) {
+          val snap = DeltaRead.snapshotOf(tip)
+          checkSchema(tablePath, dfW.schema, partitionBy, snap)
+          if (overwrite) removes = snap.liveFiles.map(_.path)
+        }
+        beforeCommit()
+        val create =
+          if (tip.nextVersion > 0L) Seq.empty
+          else Seq(DeltaFixture.protocolLine(), DeltaFixture.metaDataLine(
+            java.util.UUID.randomUUID().toString, df.schema, partitionBy))
+        Right(commitInfoLine(if (overwrite) "Overwrite" else "Append") +:
+          (create ++
+            txn.map { case (app, v) => DeltaFixture.txnLine(app, v) } ++
+            removes.map(DeltaFixture.removeLine(_)) ++ addLines(newFiles)))
       }
-      txn.foreach { case (app, v) =>
-        lines += DeltaFixture.txnLine(app, v)
-      }
-      removes.foreach(lines += DeltaFixture.removeLine(_))
-      newFiles.foreach { f =>
-        lines += DeltaFixture.addLine(
-          f.relPath, f.size, f.partitionValues, stats = f.stats)
-      }
-      if (tryCommit(fs, logDir, version, lines.result()))
-        return Some(version)
-      attempt += 1
-      if (attempt > maxRetries)
-        fail(tablePath, s"commit lost $maxRetries version races — " +
-          "giving up (staged files are inert orphans)")
-      // a concurrent writer took this version: re-validate at the tip
-      txn.foreach { case (app, v) =>
-        if (lastTxnVersion(spark, tablePath, app) >= v)
-          return None // the racer WAS this txn — already committed
-      }
-      val snap = DeltaRead.snapshot(spark, tablePath)
-      checkSchema(tablePath, dfW.schema, partitionBy, snap)
-      if (overwrite) removes = snap.liveFiles.map(_.path)
-      version = DeltaRead.versions(spark, tablePath).max + 1
     }
-    None // unreachable
   }
 
   /** The table's highest committed `txn` version for `appId`, or -1
@@ -1099,97 +905,51 @@ object DeltaWrite {
       appId: String): Long =
     txnVersions(spark, tablePath).getOrElse(appId, -1L)
 
-  /** Every appId's highest committed `txn` version — from the JSON
-    * commit chain plus (when present) single-part classic
-    * checkpoints' txn rows. A checkpoint writer must persist this map
-    * or log cleanup would reset every streaming sink's idempotence
-    * counter.
+  /** Every appId's highest committed `txn` version — from every JSON
+    * commit and every checkpoint's txn rows, single- or multi-part. A
+    * checkpoint writer must persist this map or log cleanup would
+    * reset every streaming sink's idempotence counter.
     */
   def txnVersions(
       spark: SparkSession,
-      tablePath: String): Map[String, Long] = {
-    val p = new Path(tablePath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val logDir = new Path(fs.makeQualified(p), "_delta_log")
-    if (!fs.exists(logDir)) return Map.empty
-    val names = fs.listStatus(logDir).toSeq.map(_.getPath.getName)
-    val best = scala.collection.mutable.Map.empty[String, Long]
-    def offer(app: String, v: Long): Unit =
-      if (v > best.getOrElse(app, Long.MinValue)) best(app) = v
-    names.filter(_.matches("\\d{20}\\.json")).foreach { n =>
-      val bytes = {
-        val fp = new Path(logDir, n)
-        val st = fs.getFileStatus(fp)
-        val buf = new Array[Byte](st.getLen.toInt)
-        val in = fs.open(fp)
-        try in.readFully(0L, buf) finally in.close()
-        buf
-      }
-      new String(bytes, "UTF-8").linesIterator
-        .map(_.trim).filter(_.nonEmpty).foreach { line =>
-          val node =
-            try mapper.readTree(line)
-            catch { case _: Exception => null }
-          val t = if (node == null) null else node.get("txn")
-          if (t != null) {
-            val app = Option(t.get("appId")).filter(!_.isNull)
-              .map(_.asText()).getOrElse("")
-            val v = Option(t.get("version")).map(_.asLong(-1L))
-              .getOrElse(-1L)
-            if (app.nonEmpty) offer(app, v)
-          }
-        }
-    }
-    names.filter(_.matches("\\d{20}\\.checkpoint\\.parquet")).foreach { n =>
-      val cp = spark.read.parquet(new Path(logDir, n).toString)
-      if (cp.schema.fieldNames.contains("txn")) {
-        cp.where(col("txn").isNotNull)
-          .groupBy(col("txn.appId").as("__a"))
-          .agg(max(col("txn.version")).as("__v"))
-          .collect().foreach { r =>
-            if (!r.isNullAt(0) && !r.isNullAt(1))
-              offer(r.getString(0), r.getLong(1))
-          }
-      }
-    }
-    best.toMap
-  }
+      tablePath: String): Map[String, Long] =
+    DeltaLog.open(spark, tablePath).declared.txns
 
   /** Write a single-part CLASSIC checkpoint at the table's latest
     * version (+ the `_last_checkpoint` pointer) — the log-compaction
     * step that lets [[cleanupLog]] retire old JSON commits while
     * [[DeltaRead]]'s checkpoint path keeps the table readable. The
-    * checkpoint carries everything replay needs: protocol, metaData
-    * with the table's ORIGINAL id and configuration (losing
-    * `delta.appendOnly` here would erase the constraint for every
-    * post-cleanup reader), every live add WITH its stats and size
-    * (metadata-only counts and zone-map pruning survive compaction),
-    * and every appId's highest txn version (idempotent streaming
-    * sinks keep their replay protection). Returns the checkpointed
-    * version.
+    * checkpoint carries everything replay needs: the table's CURRENT
+    * protocol (versions and feature lists — a downgraded row would
+    * drop the deletionVectors declaration and every feature
+    * obligation), metaData with the table's ORIGINAL id and
+    * configuration (losing `delta.appendOnly` here would erase the
+    * constraint for every post-cleanup reader), every live add WITH
+    * its stats and size (metadata-only counts and zone-map pruning
+    * survive compaction), and every appId's highest txn version
+    * (idempotent streaming sinks keep their replay protection).
+    * Returns the checkpointed version.
     */
   def checkpoint(spark: SparkSession, tablePath: String): Long = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val p = new Path(tablePath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val root = fs.makeQualified(p)
-    val logDir = new Path(root, "_delta_log")
-    val snap = DeltaRead.snapshot(spark, tablePath)
-    writerGate(spark, fs, logDir, root, overwrite = false)
+    val log = openTable(spark, tablePath, "checkpoint")
+    val snap = DeltaRead.snapshotOf(log)
+    writerGate(log, overwrite = false)
     // the classic checkpoint rows this writer emits carry no
     // deletionVector struct — checkpointing a DV-carrying live set
     // would ERASE the masks and resurrect deleted rows for every
-    // post-cleanup reader. Real DV tables are already refused by the
-    // writer gate (minWriterVersion 7); this guards the
-    // protocol-inconsistent hand-planted case too.
+    // post-cleanup reader. The writer gate admits v7 tables that
+    // declare deletionVectors, so this refusal is what protects them.
     if (snap.liveFiles.exists(_.dv.nonEmpty))
       fail(tablePath, "live files carry deletion vectors — this " +
         "writer's checkpoint format would erase the masks; refuse")
-    val txns = txnVersions(spark, tablePath)
+    val declared = log.declared
     val protocolT = StructType(Seq(
       StructField("minReaderVersion", IntegerType),
-      StructField("minWriterVersion", IntegerType)))
+      StructField("minWriterVersion", IntegerType),
+      StructField("readerFeatures", ArrayType(StringType)),
+      StructField("writerFeatures", ArrayType(StringType))))
     val metaT = StructType(Seq(
       StructField("id", StringType),
       StructField("format",
@@ -1215,7 +975,11 @@ object DeltaWrite {
       StructField("add", addT, nullable = true),
       StructField("txn", txnT, nullable = true)))
     val rows = new java.util.ArrayList[Row]()
-    rows.add(Row(Row(1, 2), null, null, null))
+    val proto = declared.protocol
+    def feats(fs: Seq[String]): Seq[String] = if (fs.isEmpty) null else fs
+    rows.add(Row(Row(proto.minReader, proto.minWriter,
+      feats(proto.readerFeatures), feats(proto.writerFeatures)),
+      null, null, null))
     rows.add(Row(null,
       Row(if (snap.metaId.nonEmpty) snap.metaId
       else java.util.UUID.randomUUID().toString,
@@ -1228,7 +992,7 @@ object DeltaWrite {
           f.size, 0L, true, f.stats.orNull),
         null))
     }
-    txns.toSeq.sortBy(_._1).foreach { case (app, v) =>
+    declared.txns.toSeq.sortBy(_._1).foreach { case (app, v) =>
       rows.add(Row(null, null, null, Row(app, v)))
     }
     val df = spark.createDataFrame(rows, cpT)
@@ -1257,95 +1021,16 @@ object DeltaWrite {
     * real engines' log retention.
     */
   def cleanupLog(spark: SparkSession, tablePath: String): Int = {
-    val p = new Path(tablePath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val logDir = new Path(fs.makeQualified(p), "_delta_log")
-    if (!fs.exists(logDir)) fail(tablePath, "no _delta_log")
-    val names = fs.listStatus(logDir).toSeq.map(_.getPath.getName)
-    val cps = names.filter(_.matches("\\d{20}\\.checkpoint\\.parquet"))
-      .map(_.take(20).toLong)
-    if (cps.isEmpty)
+    val log = DeltaLog.open(spark, tablePath)
+    if (!log.present) fail(tablePath, "no _delta_log")
+    val c = log.singles.keys.maxOption.getOrElse(
       fail(tablePath, "cleanupLog without a checkpoint — write one " +
-        "first (DeltaWrite.checkpoint)")
-    val c = cps.max
-    val victims = names.filter(_.matches("\\d{20}\\.json"))
-      .filter(_.take(20).toLong <= c)
-    victims.foreach(n => fs.delete(new Path(logDir, n), false): Unit)
+        "first (DeltaWrite.checkpoint)"))
+    val victims = log.jsons.rangeTo(c).values.toSeq
+    victims.foreach(st => log.fs.delete(st.getPath, false): Unit)
     // the surviving chain must still replay to the same tip
     DeltaRead.snapshot(spark, tablePath): Unit
     victims.size
-  }
-
-  /** The table's CURRENT protocol after log replay: (minReader,
-    * minWriter, readerFeatures, writerFeatures). Replay order: the
-    * newest classic checkpoint's protocol row (when present), then
-    * every later JSON commit's protocol action ascending — last wins,
-    * the reader's own rule.
-    */
-  private def currentProtocol(
-      spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      logDir: Path): (Int, Int, Set[String], Set[String]) = {
-    var state = (1, 2, Set.empty[String], Set.empty[String])
-    def featSet(s: String): Set[String] =
-      s.replaceAll("[\\[\\]\"\\s]", "").split(",").filter(_.nonEmpty).toSet
-    val names = fs.listStatus(logDir).toSeq.map(_.getPath.getName)
-    val cpVersions = names.filter(_.matches("\\d{20}\\.checkpoint\\.parquet"))
-      .map(_.take(20).toLong)
-    val base = cpVersions.maxOption
-    base.foreach { v =>
-      val cp = spark.read.parquet(
-        new Path(logDir, f"$v%020d.checkpoint.parquet").toString)
-      if (cp.schema.fieldNames.contains("protocol")) {
-        val pf = cp.schema("protocol").dataType
-          .asInstanceOf[StructType].fieldNames.toSet
-        val rCol = if (pf.contains("readerFeatures"))
-          col("protocol.readerFeatures").cast("string")
-        else lit(null).cast("string")
-        val wCol = if (pf.contains("writerFeatures"))
-          col("protocol.writerFeatures").cast("string")
-        else lit(null).cast("string")
-        cp.where(col("protocol").isNotNull)
-          .select(col("protocol.minReaderVersion"),
-            col("protocol.minWriterVersion"), rCol, wCol)
-          .collect().foreach { r =>
-            state = (
-              if (r.isNullAt(0)) 1 else r.getInt(0),
-              if (r.isNullAt(1)) 2 else r.getInt(1),
-              if (r.isNullAt(2)) Set.empty else featSet(r.getString(2)),
-              if (r.isNullAt(3)) Set.empty else featSet(r.getString(3)))
-          }
-      }
-    }
-    names.filter(_.matches("\\d{20}\\.json"))
-      .map(n => (n.take(20).toLong, n))
-      .filter { case (v, _) => base.forall(v > _) }
-      .sortBy(_._1)
-      .foreach { case (_, n) =>
-        val bytes = graft.ScratchSpace.readBytes(
-          spark, new Path(logDir, n).toString)
-        new String(bytes, "UTF-8").linesIterator
-          .map(_.trim).filter(_.nonEmpty)
-          .flatMap { line =>
-            try Some(mapper.readTree(line))
-            catch { case _: Exception => None }
-          }
-          .foreach { node =>
-            val p = node.get("protocol")
-            if (p != null) {
-              state = (
-                Option(p.get("minReaderVersion")).map(_.asInt(1))
-                  .getOrElse(1),
-                Option(p.get("minWriterVersion")).map(_.asInt(2))
-                  .getOrElse(2),
-                Option(p.get("readerFeatures")).filter(!_.isNull)
-                  .map(n => featSet(n.toString)).getOrElse(Set.empty),
-                Option(p.get("writerFeatures")).filter(!_.isNull)
-                  .map(n => featSet(n.toString)).getOrElse(Set.empty))
-            }
-          }
-      }
-    state
   }
 
   /** The legacy writer features a pre-v7 minWriterVersion IMPLIES
@@ -1397,47 +1082,37 @@ object DeltaWrite {
     val (reqReader, isReaderFeature) = supported.getOrElse(feature,
       fail(tablePath, s"enableFeature('$feature') unsupported — " +
         s"supported: ${supported.keys.toSeq.sorted.mkString(", ")}"))
-    val p = new Path(tablePath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val root = fs.makeQualified(p)
-    val logDir = new Path(root, "_delta_log")
-    if (!fs.exists(logDir) || fs.listStatus(logDir).isEmpty)
-      fail(tablePath, "enableFeature on a non-existent table")
-    writerGate(spark, fs, logDir, root, overwrite = false)
-    var attempts = 0
-    while (true) {
-      val (minR, minW, rFeats, wFeats) =
-        currentProtocol(spark, fs, logDir)
-      if (wFeats.contains(feature) &&
-        (!isReaderFeature || rFeats.contains(feature)))
-        return DeltaRead.versions(spark, tablePath).max
-      val newMinR = math.max(minR, reqReader)
-      val newRFeats =
-        (if (newMinR >= 3)
-          legacyReaderFeatures(minR) ++ rFeats ++
-            (if (isReaderFeature) Set(feature) else Set.empty)
-        else Set.empty[String]).toSeq.sorted
-      val newWFeats = (legacyWriterFeatures(minW) ++ wFeats +
-        feature).toSeq.sorted
-      val snap = DeltaRead.snapshot(spark, tablePath)
-      val cfgKey = feature match {
-        case "deletionVectors" => "delta.enableDeletionVectors"
-        case "changeDataFeed" => "delta.enableChangeDataFeed"
-      }
-      val lines = Seq(
-        commitInfoLine("EnableFeature"),
-        DeltaFixture.protocolFeaturesLine(newMinR, 7,
-          newRFeats, newWFeats),
-        DeltaFixture.metaDataLine(snap.metaId, snap.schema,
-          snap.partitionColumns,
-          configuration = snap.configuration + (cfgKey -> "true")))
-      val version = snap.version + 1
-      if (tryCommit(fs, logDir, version, lines)) return version
-      attempts += 1
-      if (attempts > maxRetries)
-        fail(tablePath, s"enableFeature lost $maxRetries version races")
+    val log = openTable(spark, tablePath, "enableFeature")
+    writerGate(log, overwrite = false)
+    val cfgKey = feature match {
+      case "deletionVectors" => "delta.enableDeletionVectors"
+      case "changeDataFeed" => "delta.enableChangeDataFeed"
     }
-    sys.error("unreachable")
+    // the protocol is re-read at the tip on every attempt
+    commitLoop(log, "enableFeature", maxRetries) { (tip, _) =>
+      val cur = tip.declared.protocol
+      if (cur.writerFeatures.contains(feature) &&
+        (!isReaderFeature || cur.readerFeatures.contains(feature)))
+        Left(Some(tip.versions.max))
+      else {
+        val newMinR = math.max(cur.minReader, reqReader)
+        val newRFeats =
+          (if (newMinR >= 3)
+            legacyReaderFeatures(cur.minReader) ++ cur.readerFeatures ++
+              (if (isReaderFeature) Set(feature) else Set.empty)
+          else Set.empty[String]).toSeq.sorted
+        val newWFeats = (legacyWriterFeatures(cur.minWriter) ++
+          cur.writerFeatures + feature).toSeq.sorted
+        val snap = DeltaRead.snapshotOf(tip)
+        Right(Seq(
+          commitInfoLine("EnableFeature"),
+          DeltaFixture.protocolFeaturesLine(newMinR, 7,
+            newRFeats, newWFeats),
+          DeltaFixture.metaDataLine(snap.metaId, snap.schema,
+            snap.partitionColumns,
+            configuration = snap.configuration + (cfgKey -> "true"))))
+      }
+    }.get
   }
 
   /** The schema's GENERATED columns: (column, generation SQL). */
@@ -1550,123 +1225,68 @@ object DeltaWrite {
         "side effect")
   }
 
-  /** Writer-side protocol gate over everything the log chain declares:
-    * JSON commits' protocol/metaData actions plus (when the readable
-    * head is a checkpoint) the checkpoint's protocol/metaData rows.
-    * Writer versions 1-4 pass with ALL their obligations honored:
-    * appendOnly (overwrites refuse), CHECK constraints + column
-    * invariants + generated-column consistency (enforced per commit
-    * via [[completeGenerated]] + [[enforceRowObligations]]), and
-    * change data feed ([[merge]]/DML write cdc actions under
-    * `delta.enableChangeDataFeed=true`). Writer version 7 passes when
-    * its EXPLICIT feature list is a subset of the features this
-    * writer honors; anything else refuses loudly.
+  /** Writer-side protocol gate over everything the log declares
+    * ([[DeltaLog.declared]]: every JSON commit, below a checkpoint too,
+    * and every checkpoint, single- or multi-part). Writer versions 1-4
+    * pass with ALL their obligations honored: appendOnly (overwrites
+    * refuse), CHECK constraints + column invariants + generated-column
+    * consistency (enforced per commit via [[completeGenerated]] +
+    * [[enforceRowObligations]]), and change data feed ([[merge]]/DML
+    * write cdc actions under `delta.enableChangeDataFeed=true`). Writer
+    * version 7 passes when its EXPLICIT feature list is a subset of the
+    * features this writer honors; anything else refuses loudly.
     */
-  private def writerGate(
-      spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      logDir: Path,
-      root: Path,
-      overwrite: Boolean): Unit = {
-    LakeCommit.gate(spark, root)
-    val names = fs.listStatus(logDir).toSeq.map(_.getPath.getName)
+  private def writerGate(log: DeltaLog, overwrite: Boolean): Unit = {
+    LakeCommit.gate(log.spark, log.root)
     // v7 feature lists are EXPLICIT obligations: accept only the ones
     // this writer honors — deletionVectors (DV-aware scans/merges,
     // DV-safe vacuum), changeDataFeed (cdc actions on merge/DML),
-    // appendOnly (gateConfig), and checkConstraints / invariants /
-    // generatedColumns (all ENFORCED on every write path via
-    // completeGenerated + enforceRowObligations)
+    // appendOnly (delta.appendOnly below), and checkConstraints /
+    // invariants / generatedColumns (all ENFORCED on every write path
+    // via completeGenerated + enforceRowObligations)
     val supportedWriterFeatures = Set("deletionVectors",
       "changeDataFeed", "appendOnly", "invariants", "checkConstraints",
       "generatedColumns")
-    def gateProtocol(minWriter: Int, feats: String): Unit = {
-      val featSet = feats.replaceAll("[\\[\\]\"\\s]", "")
-        .split(",").filter(_.nonEmpty).toSet
-      if (minWriter == 7 && featSet.nonEmpty &&
-        featSet.subsetOf(supportedWriterFeatures))
-        () // explicit features, all honored (featureless v7 refuses —
-      // a v7 table that listed nothing is malformed, not trusted)
-      else if (minWriter > 4 || featSet.nonEmpty)
-        fail(root.toString, s"table requires writer version $minWriter" +
-          (if (feats.nonEmpty) s" with features $feats" else "") +
+    val declared = log.declared
+    declared.protocols.foreach { p =>
+      val feats = p.writerFeatures.toSet
+      // featureless v7 refuses: a v7 table that listed nothing is
+      // malformed, not trusted
+      if (!(p.minWriter == 7 && feats.nonEmpty &&
+        feats.subsetOf(supportedWriterFeatures)) &&
+        (p.minWriter > 4 || feats.nonEmpty))
+        fail(log.path, s"table requires writer version ${p.minWriter}" +
+          (if (feats.nonEmpty) s" with features ${feats.mkString(",")}"
+          else "") +
           " — only writer versions <= 4 (no writer features) or v7 " +
           s"with features ⊆ ${supportedWriterFeatures.mkString(",")} " +
           "are supported")
     }
-    def gateConfig(cfg: Map[String, String]): Unit =
-      if (overwrite && cfg.get("delta.appendOnly").contains("true"))
-        fail(root.toString,
-          "table is delta.appendOnly=true — overwrite refused")
-    names.filter(_.matches("\\d{20}\\.json")).foreach { n =>
-      val bytes = graft.ScratchSpace.readBytes(
-        spark, new Path(logDir, n).toString)
-      // an unparseable line skips ONLY itself: pre-checkpoint commits
-      // are never replayed by the reader, so bailing out of the whole
-      // gate on first garbage would let one bad line disable the
-      // protocol/appendOnly check for every later commit
-      new String(bytes, "UTF-8").linesIterator
-        .map(_.trim).filter(_.nonEmpty)
-        .flatMap { line =>
-          try Some(mapper.readTree(line))
-          catch { case _: Exception => None }
-        }
-        .foreach { node =>
-          val proto = node.get("protocol")
-          if (proto != null)
-            gateProtocol(
-              Option(proto.get("minWriterVersion")).map(_.asInt(2))
-                .getOrElse(2),
-              // a present-but-EMPTY writerFeatures array declares
-              // nothing — stringify only the non-empty case
-              Option(proto.get("writerFeatures"))
-                .filter(n => !n.isNull && n.size() > 0)
-                .map(_.toString).getOrElse(""))
-          val meta = node.get("metaData")
-          if (meta != null) {
-            val cfgNode = meta.get("configuration")
-            if (cfgNode != null && !cfgNode.isNull) {
-              val it = cfgNode.properties().iterator()
-              val b = Map.newBuilder[String, String]
-              while (it.hasNext) {
-                val e = it.next()
-                b += e.getKey -> e.getValue.asText()
-              }
-              gateConfig(b.result())
-            }
-          }
-        }
-    }
-    names.filter(_.matches("\\d{20}\\.checkpoint\\.parquet")).foreach { n =>
-      val cp = spark.read.parquet(new Path(logDir, n).toString)
-      val top = cp.schema.fieldNames.toSet
-      if (top.contains("protocol")) {
-        val pf = cp.schema("protocol").dataType
-          .asInstanceOf[StructType].fieldNames.toSet
-        val featCol =
-          if (pf.contains("writerFeatures"))
-            col("protocol.writerFeatures").cast("string")
-          else lit(null).cast("string")
-        cp.where(col("protocol").isNotNull)
-          .select(col("protocol.minWriterVersion"), featCol)
-          .collect().foreach { r =>
-            gateProtocol(
-              if (r.isNullAt(0)) 2 else r.getInt(0),
-              if (r.isNullAt(1)) "" else r.getString(1))
-          }
-      }
-      if (top.contains("metaData")) {
-        val mf = cp.schema("metaData").dataType
-          .asInstanceOf[StructType].fieldNames.toSet
-        if (mf.contains("configuration"))
-          cp.where(col("metaData").isNotNull)
-            .select(col("metaData.configuration"))
-            .collect().foreach { r =>
-              if (!r.isNullAt(0))
-                gateConfig(r.getMap[String, String](0).toMap)
-            }
-      }
-    }
+    if (overwrite && declared.configurations.exists(
+      _.get("delta.appendOnly").contains("true")))
+      fail(log.path, "table is delta.appendOnly=true — overwrite refused")
   }
+
+  /** Change rows for a CDF table's commit, stage-written by
+    * [[writeChangeData]], as cdc action lines; none when the table
+    * does not enable the feed. Partitioned CDF tables refuse (cdc files
+    * would need a per-partition layout) rather than dropping change
+    * data.
+    */
+  private def cdcLines(
+      log: DeltaLog,
+      snap: DeltaRead.DeltaSnapshot,
+      verb: String)(changes: => DataFrame): Seq[String] =
+    if (!snap.configuration.get("delta.enableChangeDataFeed")
+      .contains("true")) Seq.empty
+    else {
+      if (snap.partitionColumns.nonEmpty)
+        fail(log.path, s"CDF $verb on a PARTITIONED table is " +
+          "unsupported; refused rather than dropping change data")
+      writeChangeData(log.spark, log.fs, log.root, changes).map {
+        case (rel, size) => DeltaFixture.cdcLine(rel, size)
+      }
+    }
 
   /** Stage-write change rows into `_change_data/` (unpartitioned cdc
     * files for [[DeltaRead.readCdf]]); returns (relPath, size) per
@@ -1865,12 +1485,12 @@ object DeltaWrite {
     * delta-io documents for S3 without a coordinating LogStore.
     */
   private def tryCommit(
-      fs: org.apache.hadoop.fs.FileSystem,
-      logDir: Path,
+      log: DeltaLog,
       version: Long,
       lines: Seq[String]): Boolean = {
-    fs.mkdirs(logDir)
-    val dest = new Path(logDir, f"$version%020d.json")
+    val fs = log.fs
+    fs.mkdirs(log.logDir)
+    val dest = new Path(log.logDir, f"$version%020d.json")
     val bytes = (lines.mkString("\n") + "\n").getBytes("UTF-8")
     def attempt(): Boolean =
       try {
@@ -1908,4 +1528,63 @@ object DeltaWrite {
       attempt()
     }
   }
+
+  /** The one table-open step of the verbs that need an existing table:
+    * the log, listed once, or a refusal.
+    */
+  private def openTable(
+      spark: SparkSession,
+      tablePath: String,
+      verb: String): DeltaLog = {
+    val log = DeltaLog.open(spark, tablePath)
+    if (!log.nonEmpty) fail(tablePath, s"$verb on a non-existent table")
+    log
+  }
+
+  /** The one commit loop. Each attempt gets the log listed at its start
+    * (the caller's for the first, a fresh listing after each lost
+    * version race, flagged `retry`) and returns either the lines to
+    * commit at that log's next version or, in Left, a final answer
+    * without a commit. The verb's race rule runs inside `attempt`: it
+    * refuses by throwing, or recomputes its lines. More than
+    * `maxRetries` lost races refuse.
+    */
+  private def commitLoop(log: DeltaLog, verb: String, maxRetries: Int)(
+      attempt: (DeltaLog, Boolean) => Either[Option[Long], Seq[String]])
+      : Option[Long] = {
+    @scala.annotation.tailrec
+    def loop(tip: DeltaLog, races: Int): Option[Long] =
+      attempt(tip, races > 0) match {
+        case Left(done) => done
+        case Right(lines) if tryCommit(tip, tip.nextVersion, lines) =>
+          Some(tip.nextVersion)
+        case Right(_) =>
+          if (races >= maxRetries)
+            fail(log.path, s"$verb lost $maxRetries version races — " +
+              "rerun against the new state (staged files are inert " +
+              "orphans)")
+          loop(tip.relist(), races + 1)
+      }
+    loop(log, 0)
+  }
+
+  /** [[commitLoop]] for verbs whose lines are fixed: `raced` vets the
+    * fresh log after each lost race and refuses by throwing.
+    */
+  private def commitOnce(
+      log: DeltaLog,
+      verb: String,
+      maxRetries: Int,
+      lines: Seq[String])(raced: DeltaLog => Unit): Long =
+    commitLoop(log, verb, maxRetries) { (tip, retry) =>
+      if (retry) raced(tip)
+      Right(lines)
+    }.get
+
+  /** Add actions for freshly written data files. */
+  private def addLines(
+      files: Seq[NewFile],
+      dataChange: Boolean = true): Seq[String] =
+    files.map(f => DeltaFixture.addLine(f.relPath, f.size,
+      f.partitionValues, stats = f.stats, dataChange = dataChange))
 }

@@ -1301,4 +1301,190 @@ class DeltaWriteSpec extends SparkTestBase {
     }
     assert(ep.getMessage.contains("CHECK constraint 'kpos'"))
   }
+
+  test("checkpoint carries the CURRENT protocol: a DV-upgraded table " +
+    "keeps its deletionVectors declaration through cleanupLog") {
+    val t = fresh()
+    DeltaWrite.append(kv(0, 6), t): Unit
+    DeltaWrite.enableFeature(spark, t, "deletionVectors"): Unit
+    DeltaWrite.append(kv(6, 8), t): Unit
+    assert(DeltaWrite.checkpoint(spark, t) == 2L)
+    assert(DeltaWrite.cleanupLog(spark, t) == 3)
+    // DV DML works on the table whose only protocol row is the
+    // checkpoint's
+    assert(DeltaWrite.deleteWhere(spark, t, col("k") === 1L).deletedRows == 1L)
+    assert(DeltaRead.read(spark, t).orderBy("k").collect()
+      .map(_.getLong(0)).toSeq == Seq(0L, 2L, 3L, 4L, 5L, 6L, 7L))
+    val proto = spark.read
+      .parquet(f"$t/_delta_log/${2L}%020d.checkpoint.parquet")
+      .where(col("protocol").isNotNull).select("protocol.*").collect()
+    assert(proto.length == 1)
+    val r = proto.head
+    assert((r.getAs[Int]("minReaderVersion"),
+      r.getAs[Int]("minWriterVersion")) == ((3, 7)), r.toString)
+    def feats(c: String) = r.getSeq[String](r.fieldIndex(c))
+    assert(feats("readerFeatures").contains("deletionVectors") &&
+      feats("writerFeatures").contains("deletionVectors"), r.toString)
+  }
+
+  test("writer scans read multi-part checkpoints: a part-1 protocol " +
+    "row gates the writer, a part-2 txn row counts for idempotence") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = kv(0, 1).schema
+    val cpT = StructType(Seq(
+      StructField("protocol", StructType(Seq(
+        StructField("minReaderVersion", IntegerType),
+        StructField("minWriterVersion", IntegerType)))),
+      StructField("metaData", StructType(Seq(
+        StructField("id", StringType),
+        StructField("format",
+          StructType(Seq(StructField("provider", StringType)))),
+        StructField("schemaString", StringType),
+        StructField("partitionColumns", ArrayType(StringType))))),
+      StructField("add", StructType(Seq(
+        StructField("path", StringType),
+        StructField("partitionValues",
+          MapType(StringType, StringType, valueContainsNull = true)),
+        StructField("size", LongType),
+        StructField("modificationTime", LongType),
+        StructField("dataChange", BooleanType)))),
+      StructField("txn", StructType(Seq(
+        StructField("appId", StringType),
+        StructField("version", LongType))))))
+    // a vacuumed-head table: 2-part checkpoint at v5 + a JSON tail
+    def table(minWriter: Int): String = {
+      val t = fresh()
+      val sa = DeltaFixture.plantDataFile(spark, kv(0, 4), t, "a.parquet")
+      val sb = DeltaFixture.plantDataFile(spark, kv(4, 6), t, "b.parquet")
+      val parts = Seq(
+        Seq(Row(Row(1, minWriter), null, null, null),
+          Row(null, Row("mp", Row("parquet"), schema.json, Seq.empty[String]),
+            null, null)),
+        Seq(Row(null, null,
+          Row("a.parquet", Map.empty[String, String], sa, 0L, true), null),
+          Row(null, null, null, Row("a", 9L))))
+      parts.zipWithIndex.foreach { case (rows, i) =>
+        val df = spark.createDataFrame(
+          java.util.Arrays.asList(rows: _*), cpT)
+        DeltaFixture.plantDataFile(spark, df, t,
+          f"_delta_log/${5L}%020d.checkpoint.${i + 1}%010d.${2}%010d.parquet")
+          : Unit
+      }
+      DeltaFixture.writeCommit(spark, t, 6, Seq(
+        DeltaFixture.addLine("b.parquet", sb)))
+      assert(DeltaRead.read(spark, t).count() == 6L)
+      t
+    }
+    val gated = table(minWriter = 5)
+    val e = intercept[IllegalArgumentException] {
+      DeltaWrite.append(kv(10, 11), gated)
+    }
+    assert(e.getMessage.contains("writer version 5"), e.getMessage)
+    val t = table(minWriter = 2)
+    assert(DeltaWrite.lastTxnVersion(spark, t, "a") == 9L)
+    assert(DeltaWrite.idempotentAppend(kv(10, 11), t, "a", 9L).isEmpty)
+    assert(DeltaWrite.idempotentAppend(kv(10, 11), t, "a", 10L)
+      .contains(7L))
+  }
+
+  private val benignRacer =
+    Seq("""{"commitInfo":{"operation":"Racer","timestamp":0}}""")
+
+  /** Arm a benign competitor at the table's next version; returns it. */
+  private def armBenign(t: String): Long = {
+    val n = DeltaRead.versions(spark, t).max + 1
+    RaceFileSystem.arm(benignRacer)
+    n
+  }
+
+  private def racerAt(t: String, v: Long): Boolean =
+    !RaceFileSystem.armed && new String(graft.ScratchSpace.readBytes(
+      spark, f"$t/_delta_log/$v%020d.json"), "UTF-8").contains("\"Racer\"")
+
+  test("benign commit race at the version being created: enableFeature, " +
+    "deleteWhere, updateWhere, appendEvolve and restore each land one " +
+    "version later with the same table content") {
+    val t = RaceFileSystem.table(spark, "deltarace_")
+    DeltaWrite.append(kv(0, 6), t): Unit
+    def keys(): Seq[(Long, String)] = DeltaRead.read(spark, t)
+      .orderBy("k").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    var n = armBenign(t)
+    assert(DeltaWrite.enableFeature(spark, t, "deletionVectors") == n + 1)
+    assert(racerAt(t, n))
+    assert(DeltaRead.snapshot(spark, t).configuration
+      .get("delta.enableDeletionVectors").contains("true"))
+    n = armBenign(t)
+    assert(DeltaWrite.deleteWhere(spark, t, col("k") === 1L).version
+      .contains(n + 1))
+    assert(racerAt(t, n))
+    assert(keys() == Seq(0L, 2L, 3L, 4L, 5L).map(i => (i, s"row$i")))
+    n = armBenign(t)
+    assert(DeltaWrite.updateWhere(spark, t, col("k") === 2L,
+      Map("name" -> lit("upd"))).version.contains(n + 1))
+    assert(racerAt(t, n))
+    val updated = Seq(0L, 2L, 3L, 4L, 5L)
+      .map(i => (i, if (i == 2L) "upd" else s"row$i"))
+    assert(keys() == updated)
+    val beforeEvolve = n + 1
+    n = armBenign(t)
+    assert(DeltaWrite.appendEvolve(
+      kv(10, 12).withColumn("extra", lit("x")), t) == n + 1)
+    assert(racerAt(t, n))
+    assert(DeltaRead.read(spark, t).where(col("extra") === "x")
+      .count() == 2L)
+    n = armBenign(t)
+    assert(DeltaWrite.restore(spark, t, beforeEvolve) == n + 1)
+    assert(racerAt(t, n))
+    assert(keys() == updated)
+  }
+
+  test("hostile commit race: a competitor that re-adds the touched " +
+    "file with a DV makes deleteWhere and updateWhere refuse") {
+    def dvTable(): (String, Seq[String]) = {
+      val t = RaceFileSystem.table(spark, "deltarace_")
+      val fs = new Path(t).getFileSystem(spark.sessionState.newHadoopConf())
+      val root = fs.makeQualified(new Path(t))
+      val size = DeltaFixture.plantDataFile(spark,
+        kv(0, 5).coalesce(1).sortWithinPartitions("k"), t, "a.parquet")
+      val stats = Some(DeltaFixture.statsJson(5, Map("k" -> ((0L, 4L)))))
+      DeltaFixture.writeCommit(spark, t, 0, Seq(
+        DeltaFixture.protocolFeaturesLine(3, 7,
+          Seq("deletionVectors"), Seq("deletionVectors")),
+        DeltaFixture.metaDataLine("hostile", kv(0, 1).schema),
+        DeltaFixture.addLine("a.parquet", size, stats = stats)))
+      // the competitor masks row 0 (k = 0) of the file the verb touches
+      val uuid = java.util.UUID.randomUUID()
+      val spans = DeletionVectors.writeDvFile(fs,
+        new Path(root, s"deletion_vector_$uuid.bin"), Seq(Array(0L)))
+      val ub = java.nio.ByteBuffer.allocate(16)
+      ub.putLong(uuid.getMostSignificantBits)
+      ub.putLong(uuid.getLeastSignificantBits)
+      val dv = DeletionVectors.DvDescriptor("u",
+        DeletionVectors.z85Encode(ub.array()),
+        Some(spans.head._1), spans.head._2, 1L)
+      (t, Seq(DeltaFixture.removeLine("a.parquet"),
+        DeltaFixture.addLine("a.parquet", size, stats = stats, dv = Some(dv))))
+    }
+    def rows(t: String): Seq[(Long, String)] = DeltaRead.read(spark, t)
+      .orderBy("k").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    val (t1, hostile1) = dvTable()
+    RaceFileSystem.arm(hostile1)
+    val e1 = intercept[IllegalArgumentException] {
+      DeltaWrite.deleteWhere(spark, t1, col("k") === 3L)
+    }
+    assert(e1.getMessage.contains("concurrent commit changed a touched file"),
+      e1.getMessage)
+    // only the competitor's mask landed
+    assert(rows(t1) == (1L to 4L).map(i => (i, s"row$i")))
+    val (t2, hostile2) = dvTable()
+    RaceFileSystem.arm(hostile2)
+    val e2 = intercept[IllegalArgumentException] {
+      DeltaWrite.updateWhere(spark, t2, col("k") === 3L,
+        Map("name" -> lit("upd")))
+    }
+    assert(e2.getMessage.contains("concurrent commit changed a touched file"),
+      e2.getMessage)
+    assert(rows(t2) == (1L to 4L).map(i => (i, s"row$i")))
+  }
 }
